@@ -13,6 +13,10 @@ from workloads import OPERATOR_MODULES, PHASES, TABLES, median, tail
 
 LAYER_METRICS: list[tuple[str, str]] = [
     ("host.canary_s", "s"),
+    ("proc.peak_rss_mb", "MB"),
+    ("cpu.total_s", "s"),
+    ("cpu.jvm_jit_s", "s"),
+    ("cpu.jvm_gc_s", "s"),
     ("session.get_spark_s", "s"),
     ("trace.timed_s", "s"),
     ("trace.unattributed_s", "s"),
@@ -65,6 +69,10 @@ def per_layer(res: dict, tracer, get_spark_s: float) -> dict:
         return agg.get(name, {}).get("self_s", 0.0)
 
     v["host.canary_s"] = res["canary_s"]
+    v["proc.peak_rss_mb"] = res["peak_rss_mb"]
+    v["cpu.total_s"] = res["cpu"].total
+    v["cpu.jvm_jit_s"] = res["cpu"].jit
+    v["cpu.jvm_gc_s"] = res["cpu"].gc
     v["session.get_spark_s"] = get_spark_s
     v["trace.timed_s"] = res["timed_s"]
     roots = sum(s.end - s.start for s in tracer.spans if s.parent is None)

@@ -42,7 +42,6 @@ END_TO_END = [
     ("cold_cpu_s", "s"),
     ("warm_cpu_s", "s"),
     ("query_cpu_s", "s"),
-    ("peak_rss_mb", "MB"),
 ]
 
 
@@ -140,8 +139,7 @@ def main() -> int:
         "setup_s": setup_s,
         "cold_cpu_s": res["cold_cpu_s"],
         "warm_cpu_s": res["warm_cpu_s"],
-        "query_cpu_s": workloads.median(res["query_cpu_s"]),
-        "peak_rss_mb": res["peak_rss_mb"],
+        "query_cpu_s": res["query_cpu_s"],
     }
     print(f"perfbench {args.workload} seed={args.seed}: setup_s={setup_s:.3f} "
           f"cold_s={res['cold_s']:.3f} warm_s={res['warm_s']:.3f} "

@@ -11,15 +11,20 @@ operation starts when the previous one has returned.
     fan-out, the serial tag and language loops) carry real weight.
     Phases: empty warehouse -> ``etl_repos`` (cold), append batch ->
     ``etl_repos`` (the merge path), then rounds of the declared D3-D7
-    queries over the warehouse (at least ``MIN_QUERY_ROUNDS``, more
-    while the run has seconds left).
+    queries over the warehouse (at least ``QUERY_ROUNDS``, more while
+    the run has seconds left).
 
 ``registry_mix``
     bench.py's flagship query in a fresh session (cold), then a mix of
-    its headline queries, each timed once as build plus ``collect()``.
-    Once, so memo builds are billed the way a user pays them; collect,
-    because that is what a caller of the registry pays and the oracle
-    check needs the rows, so nothing runs twice.
+    its headline queries, each timed once as build plus ``collect()``,
+    then the flagship again (at least ``FLAGSHIP_RERUNS`` times, more
+    while the run has seconds left). Once in the mix, so memo builds
+    are billed the way a user pays them; collect, because that is what
+    a caller of the registry pays and the oracle check needs the rows.
+
+Every timed phase starts from a collected heap and a quiet process tree
+(``quiesce``), and CPU is counted outside the JVM's garbage collector
+(``proc.Cpu.no_gc``): both keep one phase's leftovers out of the next.
 
 No git layer runs in ``registry_mix`` and no registry query in
 ``etl_mixed``: each is the other's control.
@@ -27,6 +32,7 @@ No git layer runs in ``registry_mix`` and no registry query in
 
 from __future__ import annotations
 
+import gc
 import os
 import statistics
 import sys
@@ -47,25 +53,26 @@ SMALL_COMMITS = 40
 APPEND_BIG = 24  # ~1% of all commits, plus one tag per touched repo
 APPEND_SMALL_REPOS = 4
 APPEND_SMALL = 12
-MIN_QUERY_ROUNDS = 5  # D3-D7 rounds per run; query metrics are their medians
+QUERY_ROUNDS = 4  # D3-D7 rounds per run at least; query metrics are per-round means
 
 # bench.py's first warm-up query and the registry's flagship; its first
 # run in the session pays the JVM's warm-up
-WARMUP = ["join_multiway_regional_revenue"]
-# bench.py's headline list without its seven slowest queries at this
-# scale (dedup_semantic_clusters, pipeline_leakage_safe_split,
-# simsearch_ivf, graph_components_large_star, dedup_ngram_jaccard,
-# streaming_hourly_agg_replay, dedup_minhash_lsh): together they cost
-# ~35 s, more than one run can spend, and their many short eager jobs
-# swing with host load the most
+FLAGSHIP = "join_multiway_regional_revenue"
+WARMUP = [FLAGSHIP]
+FLAGSHIP_RERUNS = 4  # the flagship again after the mix; query metrics are their means
+# one of bench.py's headline queries from each operator module (the
+# flagship is timed on its own). Left out, to fit a run:
+# the seven slowest headline queries at this scale
+# (dedup_semantic_clusters, pipeline_leakage_safe_split, simsearch_ivf,
+# graph_components_large_star, dedup_ngram_jaccard,
+# streaming_hourly_agg_replay, dedup_minhash_lsh: ~35 s together, and
+# their many short eager jobs swing with host load the most), and a
+# second query of a module (tpch_q9_product_profit, agg_salted_two_phase)
 MIX = [
-    "join_multiway_regional_revenue",
     "tpch_q1_pricing_summary",
-    "tpch_q9_product_profit",
     "tpch_q18_large_orders",
     "tpch_q21_waiting_suppliers",
     "agg_customer_order_stats",
-    "agg_salted_two_phase",
     "window_running_total",
     "join_broadcast_lookup",
     "setop_union_distinct",
@@ -236,11 +243,13 @@ class EtlMixed:
         errors: list[str] = []
         out: dict = {}
 
-        def etl(phase: str, exp: gitgen.Expected) -> float:
+        def etl(phase: str, exp: gitgen.Expected) -> tuple[float, proc.Cpu]:
+            """Wall seconds and CPU use of one ``etl_repos`` call."""
             nonlocal attempted, failed
             sc.setJobGroup(phase, phase)
+            quiesce(spark)
             since = time.time_ns()
-            c0 = proc.tree_cpu_s()
+            c0 = proc.cpu()
             t0 = time.perf_counter()
             try:
                 report = etl_repos(spark, paths, self.wh)
@@ -248,7 +257,7 @@ class EtlMixed:
             except Exception as exc:  # noqa: BLE001 - counted, run goes on
                 report, ok = {"failed": [repr(exc)]}, False
             elapsed = time.perf_counter() - t0
-            out[f"{phase}_cpu_s"] = proc.tree_cpu_s() - c0
+            cpu = proc.cpu() - c0
             attempted += 1
             # the check reads the warehouse outside the timed phase
             errs = check_warehouse(self.wh, exp) if ok else [f"{phase}: {report['failed']}"]
@@ -256,12 +265,12 @@ class EtlMixed:
             failed += bool(errs)
             out[f"{phase}_written"] = dir_stats(self.wh, since)
             out[f"{phase}_size"] = dir_stats(self.wh)[0]
-            return elapsed
+            return elapsed, cpu
 
-        out["cold_s"] = etl("cold", self.base)
+        out["cold_s"], cold = etl("cold", self.base)
         for r in self.repos:
             r.append()
-        out["warm_s"] = etl("warm", self.full)
+        out["warm_s"], warm = etl("warm", self.full)
         timed = out["cold_s"] + out["warm_s"]
 
         queries = d3_d7(spark, self.wh)
@@ -269,10 +278,11 @@ class EtlMixed:
         sc.setJobGroup("query", "query")
         lat: list[float] = []
         rounds: list[float] = []
-        rounds_cpu: list[float] = []
-        while len(rounds) < MIN_QUERY_ROUNDS or timed < seconds:
+        rounds_cpu: list[proc.Cpu] = []
+        quiesce(spark)
+        while len(rounds) < QUERY_ROUNDS or timed < seconds:
             rounds.append(0.0)
-            c0 = proc.tree_cpu_s()
+            c0 = proc.cpu()
             for qname, q in queries.items():
                 with trace.span("warehouse.query") if trace else nullcontext():
                     t0 = time.perf_counter()
@@ -288,10 +298,16 @@ class EtlMixed:
                 if rows != expected[qname]:
                     failed += 1
                     errors.append(f"{qname}: got {str(rows)[:200]}")
-            rounds_cpu.append(proc.tree_cpu_s() - c0)
+            rounds_cpu.append(proc.cpu() - c0)
+        log_cpu("cold", [cold])
+        log_cpu("warm", [warm])
+        log_cpu("query rounds", rounds_cpu)
         n_full = sum(self.full.commits.values())
         out["append_share"] = (n_full - sum(self.base.commits.values())) / n_full
-        out.update(lat=lat, query_s=rounds, query_cpu_s=rounds_cpu, timed_s=timed,
+        out.update(cold_cpu_s=cold.no_gc, warm_cpu_s=warm.no_gc,
+                   query_cpu_s=mean([c.no_gc for c in rounds_cpu]),
+                   cpu=sum_cpu([cold, warm, *rounds_cpu]),
+                   lat=lat, query_s=rounds, timed_s=timed,
                    attempted=attempted, failed=failed, errors=errors,
                    spark={p: spark_counts(sc, p) for p in PHASES})
         return out
@@ -315,14 +331,14 @@ class RegistryMix:
         errors: list[str] = []
         per_query: dict[str, dict] = {}
 
-        def run_one(name: str, phase: str) -> tuple[float, float]:
-            """(wall, CPU) seconds of one query: build plus collect."""
+        def run_one(name: str, phase: str, i: int = 0) -> tuple[float, proc.Cpu]:
+            """Wall seconds and CPU use of one query: build plus collect."""
             nonlocal attempted, failed
             fn = registry.QUERIES[name]
-            group = f"{phase}:{name}"
+            group = f"{phase}:{name}:{i}"
             sc.setJobGroup(group, name)
             attempted += 1
-            c0 = proc.tree_cpu_s()
+            c0 = proc.cpu()
             t0 = time.perf_counter()
             try:
                 df = fn(spark, self.sf_dir)
@@ -332,8 +348,8 @@ class RegistryMix:
             except Exception as exc:  # noqa: BLE001 - counted, run goes on
                 failed += 1
                 errors.append(f"{name}: {exc!r}"[:300])
-                return time.perf_counter() - t0, proc.tree_cpu_s() - c0
-            cpu = proc.tree_cpu_s() - c0
+                return time.perf_counter() - t0, proc.cpu() - c0
+            cpu = proc.cpu() - c0
             # outside the timed region: the rows against the query's oracle
             oracle = registry.ORACLES.get(name)
             try:
@@ -356,16 +372,26 @@ class RegistryMix:
                 "build_s": t1 - t0, "execute_s": t2 - t1,
                 "spark": spark_counts(sc, group)}
             print(f"perfbench {group}: build {t1 - t0:.3f}s run {t2 - t1:.3f}s "
-                  f"rows {len(rows)}", file=sys.stderr)
+                  f"cpu {cpu.no_gc:.2f}s rows {len(rows)}", file=sys.stderr)
             if trace is not None:
                 trace.spans.append(Span("registry.build", t0, t1))
                 trace.spans.append(Span("registry.execute", t1, t2))
             return t2 - t0, cpu
 
+        quiesce(spark)
         cold = [run_one(n, "cold") for n in WARMUP]
+        quiesce(spark)
         warm = [run_one(n, "warm") for n in MIX]
-        lat = [w for w, _ in warm]
-        cpu = [c for _, c in warm]
+        steady = []
+        timed = sum(w for w, _ in cold + warm)
+        while len(steady) < FLAGSHIP_RERUNS or timed < seconds:
+            quiesce(spark)
+            steady.append(run_one(FLAGSHIP, "query", len(steady)))
+            timed += steady[-1][0]
+        lat = [w for w, _ in steady]
+        log_cpu("flagship", [c for _, c in cold])
+        log_cpu("mix", [c for _, c in warm])
+        log_cpu("flagship reruns", [c for _, c in steady])
 
         con.close()
         counts = {p: {"jobs": 0, "stages": 0, "tasks": 0, "failed_tasks": 0}
@@ -373,10 +399,13 @@ class RegistryMix:
         for q in per_query.values():
             for k, v in q["spark"].items():
                 counts[q["phase"]][k] += v
-        return {"cold_s": sum(w for w, _ in cold), "warm_s": sum(lat),
-                "cold_cpu_s": sum(c for _, c in cold), "warm_cpu_s": sum(cpu),
-                "lat": lat, "query_s": lat, "query_cpu_s": cpu,
-                "timed_s": sum(w for w, _ in cold) + sum(lat),
+        return {"cold_s": sum(w for w, _ in cold), "warm_s": sum(w for w, _ in warm),
+                "cold_cpu_s": sum(c.no_gc for _, c in cold),
+                "warm_cpu_s": sum(c.no_gc for _, c in warm),
+                "query_cpu_s": mean([c.no_gc for _, c in steady]),
+                "cpu": sum_cpu([c for _, c in cold + warm + steady]),
+                "lat": lat, "query_s": lat,
+                "timed_s": timed,
                 "attempted": attempted, "failed": failed, "errors": errors,
                 "per_query": per_query, "spark": counts}
 
@@ -386,4 +415,27 @@ WORKLOADS = {w.name: w for w in (EtlMixed, RegistryMix)}
 
 def median(xs):
     return statistics.median(xs) if xs else 0.0
+
+
+def mean(xs):
+    return statistics.fmean(xs) if xs else 0.0
+
+
+def quiesce(spark) -> None:
+    """Start the next timed phase from a collected heap and a quiet
+    process tree, so it is not billed for the garbage or the JIT
+    backlog of the phase before it."""
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+    proc.settle()
+
+
+def sum_cpu(cpus: list[proc.Cpu]) -> proc.Cpu:
+    return proc.Cpu(*(sum(parts) for parts in zip(*cpus)))
+
+
+def log_cpu(what: str, cpus: list[proc.Cpu]) -> None:
+    print(f"perfbench cpu {what}: " + " ".join(
+        f"{c.no_gc:.2f} (jit {c.jit:.2f}) gc {c.gc:.2f} |" for c in cpus),
+        file=sys.stderr)
 
