@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.exact import count_if
 from ..sinks.upsert import (
@@ -29,6 +30,7 @@ from ..sinks.upsert import (
     write_staging,
 )
 from ..sources.git_log import (
+    batch_table,
     has_commits_by_author,
     list_tracked_files,
     repo_commits_df,
@@ -37,6 +39,10 @@ from ..sources.git_tags import repo_tags_df
 from ..sources.language import detect_language
 
 GIT_TABLES = ("commits", "file_changes", "authors", "repos", "tags")
+
+LANGUAGES_SCHEMA = StructType(
+    [StructField("name", StringType(), False), StructField("language", StringType(), True)]
+)
 
 
 def explode_file_changes(commits: DataFrame) -> DataFrame:
@@ -73,10 +79,9 @@ def aggregate_authors(commits: DataFrame) -> DataFrame:
 def repo_metadata(commits: DataFrame, languages: dict[str, str | None]) -> DataFrame:
     """K5: per-repo metadata with explicit max() instead of the
     reference's newest-first positional assumption (``src/database.ts:83``)."""
-    spark = commits.sparkSession
-    lang_rows = [(k, v) for k, v in languages.items()]
-    lang_df = spark.createDataFrame(
-        lang_rows, "name string, language string"
+    lang_rows = [{"name": k, "language": v} for k, v in languages.items()]
+    lang_df = commits.sparkSession.createDataFrame(
+        batch_table(lang_rows, LANGUAGES_SCHEMA, ("name",)), LANGUAGES_SCHEMA
     )
     per_repo = commits.groupBy(F.col("repo_name").alias("name")).agg(
         F.max("committed_at").alias("last_commit_at"),
@@ -163,13 +168,14 @@ def etl_repos(
     if commits.isEmpty():  # F3 zero-commit guard
         report["skipped"].extend(selected)
         return report
-    commits = commits.dropDuplicates(["repo_name", "sha"]).cache()
 
     languages = {
         os.path.basename(p.rstrip("/")): detect_language(list_tracked_files(p))
         for p in selected
     }
 
+    # every frame is unique on its natural key: commits and tags at the
+    # source, file_changes by its own K3 dedup, authors and repos by groupBy
     tables = {
         "commits": commits.drop("file_changes"),
         "file_changes": explode_file_changes(commits),
@@ -191,6 +197,13 @@ def etl_repos(
     if any(os.path.exists(out(t)) for t in GIT_TABLES):
         # incremental run: per-table natural-key merge (idempotent)
         for t, df in tables.items():
+            if t == "authors":
+                # K2: re-aggregate from the merged commits table (merged
+                # above), not the batch, so a run over some repos keeps
+                # the other repos' commits in each author's stats; the
+                # known schema spares a schema-inference job
+                merged = spark.read.schema(tables["commits"].schema)
+                df = aggregate_authors(merged.parquet(out("commits")))
             keep = "first" if t == "file_changes" else "last"
             if t in partitioned:
                 upsert_parquet_partitioned(
@@ -202,7 +215,7 @@ def etl_repos(
         # first run: stage everything, then publish all-or-nothing (K6)
         staged = {
             write_staging(
-                df.dropDuplicates(keys[t]),
+                df,
                 out(t),
                 partition_col="repo_name" if t in partitioned else None,
             ): out(t)
@@ -212,5 +225,4 @@ def etl_repos(
 
     report["processed"] = selected
     report["summary"] = summary_stats(commits).collect()[0].asDict(recursive=True)
-    commits.unpersist()
     return report

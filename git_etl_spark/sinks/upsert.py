@@ -38,6 +38,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+def _has_data_files(path: str) -> bool:
+    """True when the table directory holds at least one data file.
+    A partitioned write of an empty frame leaves only ``_SUCCESS``,
+    which Spark cannot infer a schema from; such a table counts as
+    absent."""
+    for _, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        if any(not f.startswith(("_", ".")) for f in files):
+            return True
+    return False
+
+
 def _merged(
     existing: DataFrame | None,
     incoming: DataFrame,
@@ -134,7 +146,7 @@ def upsert_parquet_partitioned(
             "one partition"
         )
     existing = None
-    if os.path.exists(path):
+    if _has_data_files(path):
         touched = [
             r[0] for r in df.select(partition_col).distinct().collect()
         ]

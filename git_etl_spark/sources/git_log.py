@@ -17,12 +17,13 @@ an array of file changes. The implementation is new and Spark-first:
   (P8); ``is_merge`` = >1 parent (P4); merge commits carry no numstat
   under plain ``git log`` so their additions/deletions are 0.
 
-Scale path: ``repo_commits_df`` ingests a *list* of repos by
-parallelizing subprocess scans on the driver thread pool and unioning
-Arrow-built DataFrames. At real scale (thousands of repos) the same
-parser runs inside ``mapInPandas`` over a repo-list DataFrame so each
-executor shells out to git for its slice — the parse function is
-identical either way.
+Hand-off: ``repo_commits_df`` scans a *list* of repos on a driver
+thread pool and hands the whole batch to Spark as one ``pyarrow.Table``
+(``batch_table``). Below ``spark.sql.execution.arrow.localRelationThreshold``
+that is a ``LocalRelation``: no pickled RDD and no Python worker; above
+it the JVM spreads the Arrow batches itself. Executor-side scans of
+repos on shared storage are the ``format("gitlog")`` data source
+(``gitlog_datasource.py``), which runs the same parser.
 """
 
 from __future__ import annotations
@@ -32,7 +33,10 @@ import subprocess
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..schemas import COMMITS_SCHEMA
 
@@ -208,6 +212,19 @@ def list_tracked_files(repo_path: str) -> list[str]:
     return [ln for ln in _run_git(repo_path, "ls-files").splitlines() if ln]
 
 
+def batch_table(
+    rows: list[dict], schema: StructType, natural_key: tuple[str, ...]
+) -> pa.Table:
+    """One source batch as a ``pyarrow.Table`` typed by ``schema``,
+    unique on ``natural_key``. Duplicate keys within the batch keep the
+    batch's **last** row, the merge path's K1/K4 rule
+    (``sinks.upsert._merged(keep="last")``), so a first run and a
+    rerun resolve them alike. Timestamps are naive UTC datetimes and
+    land as UTC instants whatever the driver's timezone."""
+    unique = {tuple(r[k] for k in natural_key): r for r in rows}
+    return pa.Table.from_pylist(list(unique.values()), schema=to_arrow_schema(schema))
+
+
 def repo_commits_df(
     spark: SparkSession,
     repo_paths: list[str],
@@ -215,50 +232,13 @@ def repo_commits_df(
     max_workers: int = 8,
 ) -> DataFrame:
     """S1 as a DataFrame source: parallel subprocess scans →
-    one typed DataFrame (COMMITS_SCHEMA). Empty repo list or all-empty
-    repos still yield an empty frame with the right schema (F3 guard)."""
+    one typed DataFrame (COMMITS_SCHEMA), unique on (repo_name, sha):
+    a duplicate commit (the same repository listed twice, or two
+    repositories with one directory name) keeps the batch's last row
+    (``batch_table``). Empty repo list or all-empty repos still yield
+    an empty frame with the right schema (F3 guard)."""
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
         batches = list(pool.map(lambda p: scan_repo_commits(p, branch), repo_paths))
     rows = [c for batch in batches for c in batch]
-    return spark.createDataFrame(rows, COMMITS_SCHEMA)
-
-
-def repo_commits_df_distributed(
-    spark: SparkSession,
-    repo_paths: list[str],
-    branch: str | None = None,
-    slices: int | None = None,
-) -> DataFrame:
-    """S1 scale path: the repo *list* becomes a DataFrame and each
-    executor shells out to git for its slice inside ``mapInPandas`` —
-    ingestion bandwidth scales with the cluster instead of the driver.
-    Same parser (``parse_git_log_text``) as the driver-side version,
-    so the two paths cannot diverge semantically (asserted equal in
-    tests/test_git_etl_e2e.py).
-
-    Requirements at real scale: repos must be on storage every
-    executor can reach (shared FS / pre-synced clones), and one repo's
-    log must fit an Arrow batch — for monorepos, shard further by
-    commit range (``git log <since>..<until>``) using the same
-    function shape."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    if not repo_paths:
-        return spark.createDataFrame([], COMMITS_SCHEMA)
-
-    def scan_slice(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for path in pdf["path"]:
-                commits = scan_repo_commits(path, branch)
-                if commits:
-                    yield pd.DataFrame(commits)
-
-    repo_df = spark.createDataFrame(
-        [(p,) for p in repo_paths], "path string"
-    ).repartition(slices or min(len(repo_paths), 64))
-    # mapInPandas carries the nested file_changes as object columns;
-    # rebuilding rows through the explicit schema keeps types exact
-    out = repo_df.mapInPandas(scan_slice, schema=COMMITS_SCHEMA)
-    return out
+    table = batch_table(rows, COMMITS_SCHEMA, ("repo_name", "sha"))
+    return spark.createDataFrame(table, COMMITS_SCHEMA)

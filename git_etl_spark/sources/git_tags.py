@@ -19,7 +19,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TAGS_SCHEMA
-from .git_log import repo_name_of
+from .git_log import batch_table, repo_name_of
 
 FIELD_SEP = "\x00"
 RECORD_SEP = "\x00\x00REC\x00\x00"
@@ -127,5 +127,9 @@ def scan_repo_tags(repo_path: str) -> list[dict]:
 
 
 def repo_tags_df(spark: SparkSession, repo_paths: list[str]) -> DataFrame:
+    """S2 as a DataFrame source (TAGS_SCHEMA), unique on
+    (repo_name, tag_name); a duplicate keeps the batch's last row
+    (``batch_table``)."""
     rows = [t for p in repo_paths for t in scan_repo_tags(p)]
-    return spark.createDataFrame(rows, TAGS_SCHEMA)
+    table = batch_table(rows, TAGS_SCHEMA, ("repo_name", "tag_name"))
+    return spark.createDataFrame(table, TAGS_SCHEMA)

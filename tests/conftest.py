@@ -18,9 +18,10 @@ def spark():
 
     from git_etl_spark.session import get_spark
 
+    # cores from $SPARK_GRAFT_CPUS (get_spark's default), so the session
+    # fits the host; the shuffle width stays fixed across hosts
     spark = get_spark(
         app_name="git-etl-spark-tests",
-        cpus=8,
         shuffle_partitions=8,
         # static config — must be set at session build (bucketing tests
         # saveAsTable into it)

@@ -187,20 +187,117 @@ def test_discovery_finds_repo(synthetic_repo, tmp_path):
     assert load_repositories_config(str(cfg)) == []
 
 
-def test_distributed_ingestion_matches_driver_side(spark, synthetic_repo):
-    """S1 scale path: mapInPandas executor-side scans must produce
-    exactly the driver-side thread-pool result."""
-    from git_etl_spark.sources.git_log import (
-        repo_commits_df,
-        repo_commits_df_distributed,
-    )
+def _one_author_repo(root, name, author, email, dates):
+    repo = root / name
+    repo.mkdir()
+    _git(repo, "init", "-q", "-b", "main")
+    for i, date in enumerate(dates):
+        _commit(repo, author, email, date, f"{name} {i}", {f"f{i}.py": f"{i}\n"})
+    return repo
 
-    a = repo_commits_df(spark, [str(synthetic_repo)])
-    b = repo_commits_df_distributed(spark, [str(synthetic_repo)])
-    sa = sorted(map(repr, a.collect()))
-    sb = sorted(map(repr, b.collect()))
-    assert sa == sb
-    assert b.schema == a.schema
+
+def test_repo_subset_runs_keep_author_totals(spark, tmp_path):
+    """K2: authors re-aggregate from the merged commits table. Two
+    single-repo runs into one warehouse by the same author must count
+    both repos' commits, not only the last run's batch."""
+    from git_etl_spark.plans.git_pipeline import etl_repos
+
+    a = _one_author_repo(
+        tmp_path, "proj-one", "Dana Dev", "dana@example.com",
+        ["2024-05-01T10:00:00+00:00", "2024-05-02T10:00:00+00:00",
+         "2024-05-03T10:00:00+00:00"],
+    )
+    b = _one_author_repo(
+        tmp_path, "proj-two", "Dana Dev", "dana@example.com",
+        ["2024-04-01T10:00:00+00:00", "2024-04-02T10:00:00+00:00"],
+    )
+    out = tmp_path / "wh"
+    etl_repos(spark, [str(a)], str(out))
+    etl_repos(spark, [str(b)], str(out))
+
+    assert spark.read.parquet(str(out / "commits")).count() == 5
+    (dana,) = spark.read.parquet(str(out / "authors")).collect()
+    assert dana.total_commits == 5
+    assert dana.first_commit_at.isoformat() == "2024-04-01T10:00:00"
+    assert dana.last_commit_at.isoformat() == "2024-05-03T10:00:00"
+
+
+def test_partitioned_rerun_over_tagless_repo(spark, tmp_path):
+    """A first partitioned run over a tagless repo leaves a ``tags``
+    directory with no data files (only ``_SUCCESS``); the next run must
+    treat it as an absent table instead of failing schema inference."""
+    from git_etl_spark.plans.git_pipeline import etl_repos
+
+    repo = _one_author_repo(
+        tmp_path, "proj-untagged", "Eve Ops", "eve@example.com",
+        ["2024-06-01T10:00:00+00:00"],
+    )
+    out = tmp_path / "wh"
+    etl_repos(spark, [str(repo)], str(out), layout="partitioned")
+    _commit(repo, "Eve Ops", "eve@example.com", "2024-06-02T10:00:00+00:00",
+            "second", {"g.py": "g\n"})
+    report = etl_repos(spark, [str(repo)], str(out), layout="partitioned")
+
+    assert report["processed"] == [str(repo)]
+    assert spark.read.parquet(str(out / "commits")).count() == 2
+
+
+def test_stored_timestamps_ignore_driver_timezone(spark, synthetic_repo):
+    """Commit and tag times are stored as the UTC instant git recorded,
+    whatever the driver's local timezone. The check reads the epoch
+    through a cast, because ``collect()`` converts back to local time
+    and would hide a shift."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    from git_etl_spark.sources.git_log import repo_commits_df
+    from git_etl_spark.sources.git_tags import repo_tags_df
+
+    saved = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        commits = repo_commits_df(spark, [str(synthetic_repo)])
+        tags = repo_tags_df(spark, [str(synthetic_repo)])
+        commit_epochs = {
+            r.message: r.epoch
+            for r in commits.select(
+                "message", F.col("committed_at").cast("long").alias("epoch")
+            ).collect()
+        }
+        tag_epochs = {
+            r.tag_name: r.epoch
+            for r in tags.select(
+                "tag_name", F.col("tag_date").cast("long").alias("epoch")
+            ).collect()
+        }
+    finally:
+        if saved is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = saved
+        time.tzset()
+
+    assert commit_epochs["initial commit"] == 1704103200  # 2024-01-01T10:00Z
+    assert commit_epochs["more code"] == 1704373200  # 2024-01-04T13:00Z
+    assert tag_epochs == {"v0.1": None, "v0.2": 1704373200}
+
+
+def test_git_batches_plan_as_local_relations(spark, synthetic_repo):
+    """The commit and tag batches reach Spark as Arrow ``LocalRelation``s,
+    not as a pickled ``LogicalRDD`` that needs Python workers."""
+    from git_etl_spark.plans.audit import optimized_plan
+    from git_etl_spark.sources.git_log import repo_commits_df
+    from git_etl_spark.sources.git_tags import repo_tags_df
+
+    for df in (
+        repo_commits_df(spark, [str(synthetic_repo)]),
+        repo_tags_df(spark, [str(synthetic_repo)]),
+    ):
+        plan = optimized_plan(df)
+        assert plan.startswith("LocalRelation"), plan
+        assert "LogicalRDD" not in plan
 
 
 def test_partitioned_layout_equal_contents_and_scoped_merge(
