@@ -44,6 +44,18 @@ def count_shuffles(df: DataFrame) -> int:
     ).count("Exchange rangepartitioning")
 
 
+def hash_exchanges(df: DataFrame) -> list[str]:
+    """Every ``Exchange hashpartitioning(...)`` line of the plan, from
+    ``Exchange`` on, with expression ids (``#N``, ``#NL``) and
+    ``plan_id=N`` stripped, so gates can count or compare exchanges
+    without depending on how Spark numbers attributes."""
+    return [
+        re.sub(r"#\d+L?|plan_id=\d+", "", line[line.index("Exchange") :])
+        for line in physical_plan(df).splitlines()
+        if "Exchange hashpartitioning" in line
+    ]
+
+
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in physical_plan(df) or (
         "BroadcastNestedLoopJoin" in physical_plan(df)

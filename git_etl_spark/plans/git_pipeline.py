@@ -32,6 +32,7 @@ from ..sinks.upsert import (
 from ..sources.git_log import (
     batch_table,
     has_commits_by_author,
+    has_unborn_head,
     list_tracked_files,
     repo_commits_df,
 )
@@ -154,8 +155,10 @@ def etl_repos(
     selected: list[str] = []
     for path in repo_paths:
         try:
-            if author_pattern and not has_commits_by_author(path, author_pattern):
-                report["skipped"].append(path)  # F2 gate
+            if has_unborn_head(path) or (
+                author_pattern and not has_commits_by_author(path, author_pattern)
+            ):
+                report["skipped"].append(path)  # F3 no commits yet, F2 gate
                 continue
             selected.append(path)
         except Exception as exc:  # noqa: BLE001 — O2 per-repo fail isolation

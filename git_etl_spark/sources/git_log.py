@@ -155,6 +155,18 @@ def current_branch(repo_path: str) -> str:
     return _run_git(repo_path, "rev-parse", "--abbrev-ref", "HEAD").strip()
 
 
+def has_unborn_head(repo_path: str) -> bool:
+    """F3: True when HEAD names no commit yet (a fresh ``git init``),
+    where ``rev-parse --verify -q`` exits 1. Any other failure (not a
+    repository, a missing path) answers False and is left to the scan
+    to report."""
+    probe = subprocess.run(
+        ["git", "-C", repo_path, "rev-parse", "--verify", "-q", "HEAD"],
+        capture_output=True,
+    )
+    return probe.returncode == 1
+
+
 def scan_repo_commits(
     repo_path: str,
     branch: str | None = None,

@@ -242,6 +242,32 @@ def test_partitioned_rerun_over_tagless_repo(spark, tmp_path):
     assert spark.read.parquet(str(out / "commits")).count() == 2
 
 
+def test_config_run_skips_empty_repo(spark, tmp_path, capsys):
+    """F3: a repository with no commits yet (unborn HEAD) is skipped on
+    its own; the other repositories in the config still load."""
+    import json
+
+    from git_etl_spark.cli import main
+
+    repo = _one_author_repo(
+        tmp_path, "proj-full", "Finn Dev", "finn@example.com",
+        ["2024-07-01T10:00:00+00:00"],
+    )
+    empty = tmp_path / "proj-empty"
+    empty.mkdir()
+    _git(empty, "init", "-q", "-b", "main")
+    cfg = tmp_path / "repositories.json"
+    cfg.write_text(json.dumps({"repositories": [str(repo), str(empty)]}))
+    out = tmp_path / "wh"
+
+    assert main(["-c", str(cfg), "-o", str(out)]) == 0
+    stdout = capsys.readouterr().out
+    assert "Processed 1/2 repositories successfully" in stdout
+    assert "1 repositories skipped" in stdout
+    (row,) = spark.read.parquet(str(out / "commits")).collect()
+    assert row.repo_name == "proj-full"
+
+
 def test_stored_timestamps_ignore_driver_timezone(spark, synthetic_repo):
     """Commit and tag times are stored as the UTC instant git recorded,
     whatever the driver's local timezone. The check reads the epoch

@@ -35,13 +35,33 @@ def test_entry_smoke(spark):
     assert len(rows) > 0 and len(df.columns) > 0
 
 
-def test_every_query_has_callable(spark):
-    import __spark_entry__ as e
+def test_every_query_has_callable(monkeypatch, tmp_path):
+    import subprocess
 
+    import __spark_entry__ as e
+    from git_etl_spark import registry
+
+    def no_subprocess(*args, **kwargs):
+        raise AssertionError(f"queries() started a subprocess: {args}")
+
+    monkeypatch.setattr(subprocess, "run", no_subprocess)
+    monkeypatch.setattr(subprocess, "Popen", no_subprocess)
     qs = e.queries()
     assert qs, "no queries registered"
     for name, fn in qs.items():
         assert callable(fn), name
+    # a permutation of the registry, mapping each name to its own callable
+    assert sorted(qs) == sorted(registry.QUERIES)
+    assert all(fn is registry.QUERIES[name] for name, fn in qs.items())
     # every oracle key must have a query
     for name in e.oracle_sql():
         assert name in qs, f"oracle {name} lacks a query"
+
+    # rotation: each recorded round moves the front by ROUND_BUDGET
+    names = list(registry.QUERIES)
+    monkeypatch.setattr(e, "HERE", tmp_path)
+    assert next(iter(e.queries())) == names[0]
+    for rnd in range(1, 8):
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text("{}")
+        offset = (e.ROUND_BUDGET * rnd) % len(names)
+        assert list(e.queries()) == names[offset:] + names[:offset], rnd

@@ -623,22 +623,17 @@ def test_lss_round_one_exchange_per_phase(spark):
     textually duplicates the ls subtree, but its two exchanges are
     canonically identical (runtime exchange reuse), unlike the r15
     join form where per-consumer filter pushdown made them differ."""
-    import re
-
     from git_etl_spark.operators.graph import _lss_round
-    from git_etl_spark.plans.audit import physical_plan
+    from git_etl_spark.plans.audit import hash_exchanges, physical_plan
 
     cur = spark.createDataFrame(
         [(1, 2), (2, 3), (5, 6)], "a long, b long"
     ).localCheckpoint()
-    plan = physical_plan(_lss_round(cur, 4))
+    lss = _lss_round(cur, 4)
+    plan = physical_plan(lss)
     assert "Join" not in plan, plan
-    normalized = {
-        re.sub(r"#\d+L?|plan_id=\d+", "", line[line.index("Exchange") :])
-        for line in plan.splitlines()
-        if "Exchange hashpartitioning" in line
-    }
-    assert len(normalized) == 3, normalized
+    distinct = set(hash_exchanges(lss))
+    assert len(distinct) == 3, distinct
 
 
 def test_lss_final_labels_sized_by_loop_parts(spark):
@@ -649,12 +644,20 @@ def test_lss_final_labels_sized_by_loop_parts(spark):
     loop_shuffle_partitions scope (measured r16: 128 tasks over a
     KB-sized label table before the fix)."""
     from git_etl_spark.operators.graph import large_star_small_star
-    from git_etl_spark.plans.audit import count_shuffles, physical_plan
+    from git_etl_spark.plans.audit import (
+        count_shuffles,
+        hash_exchanges,
+        physical_plan,
+    )
 
     edges = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "a long, b long")
     labels = large_star_small_star(spark, edges)
     # tiny graph -> loop parts = 1; both tail exchanges must say so
     plan = physical_plan(labels)
     assert count_shuffles(labels) == 2, plan
-    assert plan.count("Exchange hashpartitioning(v#") == 2, plan
+    on_v = [
+        e for e in hash_exchanges(labels)
+        if e.startswith("Exchange hashpartitioning(v,")
+    ]
+    assert len(on_v) == 2, plan
     assert "REPARTITION_BY_NUM" in plan, plan
