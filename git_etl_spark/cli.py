@@ -9,10 +9,11 @@ Two modes, mirroring the reference exactly:
   summary banner (processed / skipped / failed counts,
   ``main.ts:357-369``), exit 1 only if the config itself cannot load.
 - **Single-repo mode** (positional path): validate the path exists and
-  is a directory (exit 1 otherwise, ``main.ts:400-411``); if an
-  ``--author`` gate is set and the repo has no matching commits, print
-  the skip notice and exit 0 (``main.ts:414-419``); an ETL failure
-  exits 1 (``main.ts:421-430``).
+  is a directory (exit 1 otherwise, ``main.ts:400-411``); run the same
+  ETL as config mode over the one repo; if it skips the repo (no
+  commits yet, or none matching ``--author``), print the skip notice
+  and exit 0 (``main.ts:414-419``); an ETL failure exits 1
+  (``main.ts:421-430``).
 
 Differences from the reference, on purpose:
 
@@ -131,19 +132,14 @@ def main(argv: list[str] | None = None) -> int:
         return 1
 
     spark = get_spark(app_name="git-etl-spark-cli")
-    if args.author:
-        from .sources.git_log import has_commits_by_author
-
-        if not has_commits_by_author(repo_path, args.author):
-            print("Repository has no matching commits. Skipping.")
-            return 0
-
-    report = etl_repos(spark, [repo_path], args.output, author_pattern=None)
+    report = etl_repos(spark, [repo_path], args.output, author_pattern=args.author)
     if report["failed"]:
         print(f"\nETL failed: {report['failed'][0]['error']}", file=sys.stderr)
         return 1
-    if "summary" in report:
-        print(format_summary_report(report["summary"]))
+    if report["skipped"]:
+        print("Repository has no matching commits. Skipping.")
+        return 0
+    print(format_summary_report(report["summary"]))
     return 0
 
 

@@ -392,10 +392,9 @@ def streaming_foreachbatch_upsert_replay(spark: SparkSession, sf_dir: str) -> Da
     mutated row anywhere in the stream → merge → publish chain
     mismatches.
 
-    At 100 TB the identical pipeline runs partition-scoped
-    (upsert_parquet_partitioned): a micro-batch rewrites only the
-    date/tenant partitions it touches. The replay sizes the stateless
-    shuffle from source volume like the other replays
+    Each micro-batch rewrites the whole target table, so the sink suits
+    tables that fit one rewrite per trigger. The replay sizes the
+    stateless shuffle from source volume like the other replays
     (_replay_partitions)."""
     from ..streaming.events_stream import stream_upsert_to_parquet
 

@@ -44,14 +44,19 @@ def count_shuffles(df: DataFrame) -> int:
     ).count("Exchange rangepartitioning")
 
 
-def hash_exchanges(df: DataFrame) -> list[str]:
+def hash_exchanges(df: DataFrame, below: str | None = None) -> list[str]:
     """Every ``Exchange hashpartitioning(...)`` line of the plan, from
     ``Exchange`` on, with expression ids (``#N``, ``#NL``) and
     ``plan_id=N`` stripped, so gates can count or compare exchanges
-    without depending on how Spark numbers attributes."""
+    without depending on how Spark numbers attributes. With ``below``,
+    only the lines after the first one containing that text: the plan
+    prints parents first, so these exchanges sit under it."""
+    lines = physical_plan(df).splitlines()
+    if below is not None:
+        lines = lines[next(i for i, ln in enumerate(lines) if below in ln) :]
     return [
         re.sub(r"#\d+L?|plan_id=\d+", "", line[line.index("Exchange") :])
-        for line in physical_plan(df).splitlines()
+        for line in lines
         if "Exchange hashpartitioning" in line
     ]
 

@@ -17,18 +17,15 @@ Design decisions carried from SURVEY §7.3:
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..functions.exact import count_if
-from ..sinks.upsert import (
-    publish_all,
-    upsert_parquet,
-    upsert_parquet_partitioned,
-    write_staging,
-)
+from ..sinks.upsert import _merged, publish_all, write_staging
+from ..sinks.upsert import upsert_parquet  # noqa: F401 — patched by perfbench.spans.ETL_SITES
 from ..sources.git_log import (
     batch_table,
     has_commits_by_author,
@@ -136,21 +133,22 @@ def etl_repos(
     repo_paths: list[str],
     output_dir: str,
     author_pattern: str | None = None,
-    layout: str = "flat",
 ) -> dict:
-    """O1/O2: multi-repo ETL into a five-table Parquet warehouse with
-    idempotent natural-key merges and K6 staged publish. Returns a run
-    report (per-repo success/skip/fail counts — the reference's
-    summary banner, ``main.ts:357-369``).
+    """O1/O2: multi-repo ETL into a five-table flat Parquet warehouse
+    (``<output_dir>/<table>/``) with idempotent natural-key merges.
+    Returns a run report (per-repo success/skip/fail counts — the
+    reference's summary banner, ``main.ts:357-369``).
 
-    ``layout='partitioned'`` is the at-scale warehouse shape: the
-    repo-keyed tables (commits / file_changes / tags) are laid out
-    ``partitionBy(repo_name)`` and incremental merges rewrite only the
-    partitions of repos present in the batch
-    (``upsert_parquet_partitioned``); the global tables (authors,
-    repos) still merge whole — they are node-scale, not fact-scale.
-    Both layouts produce identical table *contents* (asserted in
-    tests/test_git_etl_e2e.py)."""
+    Every run, first or incremental, takes one commit path (K6, the
+    reference's ``BEGIN/COMMIT``, ``src/transactions.ts:43-56``): each
+    table that already exists is window-merged with the batch on its
+    natural key, a table that does not is written as the batch is, and
+    the result goes to a staging directory beside the table. ``authors``
+    is aggregated from the commits being published (K2), so a run over
+    some repos keeps the other repos' commits in each author's stats.
+    Only when all five tables are staged does one ``publish_all`` swap
+    them in; a failed staging write removes the staging directories
+    already written and leaves every table as it was."""
     report = {"processed": [], "skipped": [], "failed": []}
     selected: list[str] = []
     for path in repo_paths:
@@ -178,53 +176,48 @@ def etl_repos(
     }
 
     # every frame is unique on its natural key: commits and tags at the
-    # source, file_changes by its own K3 dedup, authors and repos by groupBy
-    tables = {
+    # source, file_changes by its own K3 dedup, repos by groupBy
+    batch = {
         "commits": commits.drop("file_changes"),
         "file_changes": explode_file_changes(commits),
-        "authors": aggregate_authors(commits),
         "repos": repo_metadata(commits, languages),
         "tags": repo_tags_df(spark, selected),
     }
     keys = {
         "commits": ["repo_name", "sha"],
         "file_changes": ["repo_name", "sha", "file_path"],
-        "authors": ["email"],
         "repos": ["name"],
         "tags": ["repo_name", "tag_name"],
     }
 
-    partitioned = {"commits", "file_changes", "tags"} if layout == "partitioned" else set()
-
     out = lambda t: os.path.join(output_dir, t)  # noqa: E731
-    if any(os.path.exists(out(t)) for t in GIT_TABLES):
-        # incremental run: per-table natural-key merge (idempotent)
-        for t, df in tables.items():
+    staged: dict[str, str] = {}  # staging dir -> table dir
+    try:
+        for t in GIT_TABLES:
             if t == "authors":
-                # K2: re-aggregate from the merged commits table (merged
-                # above), not the batch, so a run over some repos keeps
-                # the other repos' commits in each author's stats; the
-                # known schema spares a schema-inference job
-                merged = spark.read.schema(tables["commits"].schema)
-                df = aggregate_authors(merged.parquet(out("commits")))
-            keep = "first" if t == "file_changes" else "last"
-            if t in partitioned:
-                upsert_parquet_partitioned(
-                    spark, df, out(t), keys[t], "repo_name", keep=keep
-                )
+                df = aggregate_authors(published_commits)
             else:
-                upsert_parquet(spark, df, out(t), keys[t], keep=keep)
-    else:
-        # first run: stage everything, then publish all-or-nothing (K6)
-        staged = {
-            write_staging(
-                df,
-                out(t),
-                partition_col="repo_name" if t in partitioned else None,
-            ): out(t)
-            for t, df in tables.items()
-        }
-        publish_all(staged)
+                df = batch[t]
+                if os.path.exists(out(t)):
+                    # the known schema spares a schema-inference job
+                    existing = spark.read.schema(df.schema).parquet(out(t))
+                    keep = "first" if t == "file_changes" else "last"
+                    df = _merged(existing, df, keys[t], keep)
+            staging = write_staging(df, out(t))
+            staged[staging] = out(t)
+            if t == "commits":
+                # K2: authors aggregate the commits being published — the
+                # batch on a first run, the staged merge otherwise
+                published_commits = (
+                    spark.read.schema(df.schema).parquet(staging)
+                    if os.path.exists(out(t))
+                    else df
+                )
+    except BaseException:
+        for staging in staged:
+            shutil.rmtree(staging, ignore_errors=True)
+        raise
+    publish_all(staged)
 
     report["processed"] = selected
     report["summary"] = summary_stats(commits).collect()[0].asDict(recursive=True)

@@ -12,20 +12,20 @@ columnar store:
   table** (``aggregate_authors``): exact by construction, replacing
   incremental MIN/MAX/+ accumulation — the partial/final aggregate
   pattern Spark already implements internally.
-- K6 multi-table transaction → staging-then-publish: every table writes
-  to a staging dir; publish atomically renames all or nothing.
+- K6 multi-table transaction → staging-then-publish: every table is
+  written to a staging dir beside it, and only when all of them are
+  staged does ``publish_all`` rename them into place, one table after
+  another. A failure while staging leaves every table untouched; a
+  failure *during* the renames (a window of a few ``os.rename`` calls)
+  can leave earlier tables published and later ones not, and a reader
+  racing a swap can briefly find a table's path missing. Cross-table
+  snapshot atomicity needs a metadata pointer: ``sinks/versioned.py``.
 
-Scale notes: plain ``upsert_parquet`` rewrites the whole table per
-merge — fine for the test warehouse, wrong at 100 TB.
-``upsert_parquet_partitioned`` is the scale path: the table is laid
-out ``partitionBy(partition_col)`` and a merge touches ONLY the
-partitions that receive incoming keys — existing reads prune to those
-partitions (partition filter at the scan) and the write uses
-``partitionOverwriteMode=dynamic`` so untouched partitions' files are
-not even opened. A Delta/Iceberg MERGE backend slots behind the same
-function signature. Correctness (idempotence: running the same load
-twice yields identical tables; untouched-partition bytes identical)
-is asserted in tests/test_sinks.py.
+Scale note: ``upsert_parquet`` and the ETL's merge rewrite the whole
+table per merge — fine for a git-history warehouse, wrong at 100 TB,
+where a Delta/Iceberg MERGE would slot behind the same natural-key
+semantics. Correctness (idempotence: running the same load twice
+yields identical tables) is asserted in tests/test_sinks.py.
 """
 
 from __future__ import annotations
@@ -36,18 +36,6 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-
-def _has_data_files(path: str) -> bool:
-    """True when the table directory holds at least one data file.
-    A partitioned write of an empty frame leaves only ``_SUCCESS``,
-    which Spark cannot infer a schema from; such a table counts as
-    absent."""
-    for _, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        if any(not f.startswith(("_", ".")) for f in files):
-            return True
-    return False
 
 
 def _merged(
@@ -104,76 +92,19 @@ def upsert_parquet(
     if os.path.exists(path):
         existing = spark.read.parquet(path)
     merged = _merged(existing, df, natural_key, keep)
-    tmp = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    publish(tmp, path)
+    publish(write_staging(merged, path), path)
 
 
-def upsert_parquet_partitioned(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    natural_key: list[str],
-    partition_col: str,
-    keep: str = "last",
-) -> None:
-    """Partition-scoped merge — the 100 TB path promised in the module
-    docstring. The table is laid out ``partitionBy(partition_col)``
-    (which must be a prefix component of the natural key, e.g.
-    ``repo_name``); a merge:
-
-    1. collects the distinct partition values present in ``df``
-       (driver-side, bounded: one value per ingested repo/tenant);
-    2. reads ONLY those partitions of the existing table — the
-       ``isin`` filter on the partition column prunes at file listing,
-       so untouched partitions are never scanned;
-    3. window-merges on the natural key exactly like ``upsert_parquet``;
-    4. writes with ``partitionOverwriteMode=dynamic``, which replaces
-       only the partition directories present in the merged frame —
-       untouched partitions' files are not rewritten (byte-identical
-       after the merge, asserted in tests/test_sinks.py).
-
-    Unlike ``upsert_parquet`` there is no staging+rename swap: dynamic
-    overwrite commits per-partition via Spark's file-commit protocol.
-    Concurrent readers of a partition being replaced can observe the
-    swap; production deployments layer Delta/Iceberg snapshot isolation
-    behind this same signature.
-    """
-    if partition_col not in natural_key:
-        raise ValueError(
-            f"partition column {partition_col!r} must be part of the "
-            f"natural key {natural_key} so a key's rows live in exactly "
-            "one partition"
-        )
-    existing = None
-    if _has_data_files(path):
-        touched = [
-            r[0] for r in df.select(partition_col).distinct().collect()
-        ]
-        existing = spark.read.parquet(path).filter(
-            F.col(partition_col).isin(touched)
-        )
-    merged = _merged(existing, df, natural_key, keep)
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(path)
-    )
-
-
-def write_staging(
-    df: DataFrame, final_path: str, partition_col: str | None = None
-) -> str:
-    """First half of the K6 transaction: write to a staging dir,
-    return its path for a later ``publish``. ``partition_col`` lays the
-    staged table out partitioned, so the published table supports the
-    partition-scoped merge path from day one."""
+def write_staging(df: DataFrame, final_path: str) -> str:
+    """First half of the K6 transaction: write to a staging dir beside
+    ``final_path`` and return its path for a later ``publish``. A
+    failed write removes its own staging dir."""
     tmp = f"{final_path}.staging-{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_col is not None:
-        writer = writer.partitionBy(partition_col)
-    writer.parquet(tmp)
+    try:
+        df.write.mode("overwrite").parquet(tmp)
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     return tmp
 
 

@@ -21,9 +21,8 @@ Hand-off: ``repo_commits_df`` scans a *list* of repos on a driver
 thread pool and hands the whole batch to Spark as one ``pyarrow.Table``
 (``batch_table``). Below ``spark.sql.execution.arrow.localRelationThreshold``
 that is a ``LocalRelation``: no pickled RDD and no Python worker; above
-it the JVM spreads the Arrow batches itself. Executor-side scans of
-repos on shared storage are the ``format("gitlog")`` data source
-(``gitlog_datasource.py``), which runs the same parser.
+it the JVM spreads the Arrow batches itself. This is the only scan
+path: the ETL, the CLI and the benchmark all ingest through it.
 """
 
 from __future__ import annotations
@@ -157,55 +156,30 @@ def current_branch(repo_path: str) -> str:
 
 def has_unborn_head(repo_path: str) -> bool:
     """F3: True when HEAD names no commit yet (a fresh ``git init``),
-    where ``rev-parse --verify -q`` exits 1. Any other failure (not a
-    repository, a missing path) answers False and is left to the scan
-    to report."""
+    where ``rev-parse --verify -q`` exits 1; False when it names one
+    (exit 0). Anything else (not a repository, a missing path) raises
+    ``CalledProcessError``, so the caller reports that repository as
+    failed."""
     probe = subprocess.run(
         ["git", "-C", repo_path, "rev-parse", "--verify", "-q", "HEAD"],
         capture_output=True,
+        text=True,
     )
+    if probe.returncode not in (0, 1):
+        raise subprocess.CalledProcessError(
+            probe.returncode, probe.args, probe.stdout, probe.stderr
+        )
     return probe.returncode == 1
 
 
-def scan_repo_commits(
-    repo_path: str,
-    branch: str | None = None,
-    author_pattern: str | None = None,
-    skip: int | None = None,
-    max_count: int | None = None,
-) -> list[dict]:
-    """S1: subprocess scan → parsed commit records. ``author_pattern``
-    (a git --author regex) prefilters inside git itself — the pushdown
-    channel used by the gitlog DataSource. ``skip``/``max_count`` slice
-    the (deterministic) commit list — the monorepo sharding channel:
-    disjoint [skip, skip+max_count) windows of the same ordering
-    partition the full scan exactly."""
+def scan_repo_commits(repo_path: str, branch: str | None = None) -> list[dict]:
+    """S1: one ``git log --numstat`` subprocess over ``branch`` (default
+    the checked-out one) → parsed commit records."""
     branch = branch or current_branch(repo_path)
-    args = ["log", branch, f"--pretty=format:{LOG_FORMAT}", "--numstat"]
-    if author_pattern:
-        args[2:2] = ["--author", author_pattern]
-    if skip:
-        args[2:2] = [f"--skip={skip}"]
-    if max_count is not None:
-        args[2:2] = [f"--max-count={max_count}"]
-    text = _run_git(repo_path, *args)
+    text = _run_git(
+        repo_path, "log", branch, f"--pretty=format:{LOG_FORMAT}", "--numstat"
+    )
     return parse_git_log_text(text, repo_name_of(repo_path), branch)
-
-
-def count_commits(
-    repo_path: str,
-    branch: str | None = None,
-    author_pattern: str | None = None,
-) -> int:
-    """Commit count for shard planning (``git rev-list --count``), with
-    the same author prefilter as the scan so shard ranges align with
-    the filtered list the shards will slice."""
-    branch = branch or current_branch(repo_path)
-    args = ["rev-list", "--count"]
-    if author_pattern:
-        args += ["--author", author_pattern]
-    args.append(branch)
-    return int(_run_git(repo_path, *args).strip() or 0)
 
 
 def has_commits_by_author(repo_path: str, pattern: str, branch: str | None = None) -> bool:

@@ -188,7 +188,6 @@ def stream_upsert_to_parquet(
     target: str,
     checkpoint: str,
     natural_key: list[str] | None = None,
-    partition_col: str | None = None,
 ):
     """``foreachBatch`` lake sink: every micro-batch merges into the
     parquet table by natural key (``sinks.upsert.upsert_parquet``), so
@@ -198,24 +197,16 @@ def stream_upsert_to_parquet(
     exactly-once at the table level). This is the production shape for
     continuous ingestion into a lake table: the same merge the batch
     loads use (reference load semantics, ``main.ts:102-103``), driven
-    by the streaming engine's checkpointed offsets. With
-    ``partition_col`` the merge is partition-scoped (dynamic partition
-    overwrite) so a micro-batch only rewrites partitions it touches —
-    the 100 TB shape, where a batch lands in the current date/tenant
-    partitions and the rest of the table is never opened.
+    by the streaming engine's checkpointed offsets. Each micro-batch
+    rewrites the whole target table.
 
     Returns the started StreamingQuery (caller awaits termination)."""
-    from ..sinks.upsert import upsert_parquet, upsert_parquet_partitioned
+    from ..sinks.upsert import upsert_parquet
 
     key = natural_key or ["event_id"]
 
     def _merge(batch_df: DataFrame, _batch_id: int) -> None:
-        if partition_col is not None:
-            upsert_parquet_partitioned(
-                spark, batch_df, target, key, partition_col
-            )
-        else:
-            upsert_parquet(spark, batch_df, target, key)
+        upsert_parquet(spark, batch_df, target, key)
 
     return (
         events.writeStream.foreachBatch(_merge)

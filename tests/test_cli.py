@@ -84,6 +84,21 @@ def test_author_gate_skips_exit_0(spark, cli_repo, tmp_path, capsys):
     assert not out.exists()
 
 
+def test_unborn_head_skips_exit_0(spark, tmp_path, capsys):
+    """A repository with no commits yet is skipped with the notice and
+    exit 0, with or without an ``--author`` gate."""
+    from git_etl_spark.cli import main
+
+    repo = tmp_path / "proj-empty"
+    repo.mkdir()
+    _git(repo, "init", "-q", "-b", "main")
+    out = tmp_path / "warehouse"
+    for gate in ([], ["--author", "NoSuch"]):
+        assert main([str(repo), "--output", str(out), *gate]) == 0
+        assert "Skipping" in capsys.readouterr().out
+    assert not out.exists()
+
+
 def test_config_mode_banner(spark, cli_repo, tmp_path, capsys):
     from git_etl_spark.cli import main
 

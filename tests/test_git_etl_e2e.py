@@ -74,6 +74,18 @@ def _run_etl(spark, repo, out_dir):
     return etl_repos(spark, [str(repo)], str(out_dir))
 
 
+def _tables(spark, out):
+    """Every warehouse table as sorted row reprs; None when absent."""
+    from git_etl_spark.plans.git_pipeline import GIT_TABLES
+
+    return {
+        t: sorted(map(repr, spark.read.parquet(str(out / t)).collect()))
+        if (out / t).exists()
+        else None
+        for t in GIT_TABLES
+    }
+
+
 def test_etl_end_to_end(spark, synthetic_repo, tmp_path):
     out = tmp_path / "warehouse"
     report = _run_etl(spark, synthetic_repo, out)
@@ -222,10 +234,9 @@ def test_repo_subset_runs_keep_author_totals(spark, tmp_path):
     assert dana.last_commit_at.isoformat() == "2024-05-03T10:00:00"
 
 
-def test_partitioned_rerun_over_tagless_repo(spark, tmp_path):
-    """A first partitioned run over a tagless repo leaves a ``tags``
-    directory with no data files (only ``_SUCCESS``); the next run must
-    treat it as an absent table instead of failing schema inference."""
+def test_rerun_over_tagless_repo(spark, tmp_path):
+    """A first run over a tagless repo publishes an empty ``tags``
+    table; the next run must merge into it, not fail on it."""
     from git_etl_spark.plans.git_pipeline import etl_repos
 
     repo = _one_author_repo(
@@ -233,13 +244,14 @@ def test_partitioned_rerun_over_tagless_repo(spark, tmp_path):
         ["2024-06-01T10:00:00+00:00"],
     )
     out = tmp_path / "wh"
-    etl_repos(spark, [str(repo)], str(out), layout="partitioned")
+    etl_repos(spark, [str(repo)], str(out))
     _commit(repo, "Eve Ops", "eve@example.com", "2024-06-02T10:00:00+00:00",
             "second", {"g.py": "g\n"})
-    report = etl_repos(spark, [str(repo)], str(out), layout="partitioned")
+    report = etl_repos(spark, [str(repo)], str(out))
 
     assert report["processed"] == [str(repo)]
     assert spark.read.parquet(str(out / "commits")).count() == 2
+    assert spark.read.parquet(str(out / "tags")).count() == 0
 
 
 def test_config_run_skips_empty_repo(spark, tmp_path, capsys):
@@ -266,6 +278,33 @@ def test_config_run_skips_empty_repo(spark, tmp_path, capsys):
     assert "1 repositories skipped" in stdout
     (row,) = spark.read.parquet(str(out / "commits")).collect()
     assert row.repo_name == "proj-full"
+
+
+def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypatch):
+    """O2: a directory that is not a git repository fails on its own;
+    the other repositories in the config still load."""
+    import json
+
+    from git_etl_spark.cli import main
+
+    # git must not find a repository above the plain directory
+    monkeypatch.setenv("GIT_CEILING_DIRECTORIES", str(tmp_path))
+    repo = _one_author_repo(
+        tmp_path, "proj-good", "Gia Dev", "gia@example.com",
+        ["2024-08-01T10:00:00+00:00"],
+    )
+    plain = tmp_path / "not-a-repo"
+    plain.mkdir()
+    cfg = tmp_path / "repositories.json"
+    cfg.write_text(json.dumps({"repositories": [str(repo), str(plain)]}))
+    out = tmp_path / "wh"
+
+    assert main(["-c", str(cfg), "-o", str(out)]) == 0
+    stdout = capsys.readouterr().out
+    assert "Processed 1/2 repositories successfully" in stdout
+    assert "1 repositories failed" in stdout
+    (row,) = spark.read.parquet(str(out / "commits")).collect()
+    assert row.repo_name == "proj-good"
 
 
 def test_stored_timestamps_ignore_driver_timezone(spark, synthetic_repo):
@@ -326,200 +365,78 @@ def test_git_batches_plan_as_local_relations(spark, synthetic_repo):
         assert "LogicalRDD" not in plan
 
 
-def test_partitioned_layout_equal_contents_and_scoped_merge(
-    spark, synthetic_repo, tmp_path_factory, tmp_path
-):
-    """layout='partitioned' end-to-end: same table contents as the flat
-    layout, and an incremental merge touching one repo leaves the other
-    repo's commits partition files byte-identical (the at-scale merge
-    contract, through the real pipeline rather than the sink alone)."""
-    import os as _os
+@pytest.fixture(scope="module")
+def crash_repos(tmp_path_factory):
+    """One repository at two points of its history under one name:
+    ``new`` is a clone of ``old`` plus one commit, so an ETL of ``new``
+    over a warehouse of ``old`` is an incremental run that changes
+    every table."""
+    root = tmp_path_factory.mktemp("crash")
+    old = root / "old" / "proj-crash"
+    old.mkdir(parents=True)
+    _git(old, "init", "-q", "-b", "main")
+    _commit(old, "Hana Dev", "hana@example.com", "2024-09-01T10:00:00+00:00",
+            "first", {"a.py": "a\n"}, tag="v1")
+    _commit(old, "Ivan Ops", "ivan@example.com", "2024-09-02T10:00:00+00:00",
+            "second", {"b.py": "b\n"})
+    new = root / "new" / "proj-crash"
+    new.parent.mkdir()
+    subprocess.run(["git", "clone", "-q", str(old), str(new)], check=True)
+    _commit(new, "Hana Renamed", "hana@example.com", "2024-09-03T10:00:00+00:00",
+            "third", {"a.py": "a\nc\n", "docs/c.md": "c\n"}, tag="v2")
+    return old, new
 
+
+@pytest.fixture(scope="module")
+def crash_reference(spark, crash_repos, tmp_path_factory):
+    """The tables after an uninterrupted first run of ``old`` and after
+    an uninterrupted rerun of ``new`` over it."""
     from git_etl_spark.plans.git_pipeline import etl_repos
 
-    other = tmp_path_factory.mktemp("repos2") / "proj-beta"
-    other.mkdir()
-    _git(other, "init", "-q", "-b", "main")
-    _commit(
-        other, "Cara Coder", "cara@example.com", "2024-03-01T09:00:00+00:00",
-        "beta initial", {"b.py": "b = 1\n"},
-    )
-
-    flat, part = tmp_path / "flat", tmp_path / "part"
-    repos = [str(synthetic_repo), str(other)]
-    etl_repos(spark, repos, str(flat))
-    etl_repos(spark, repos, str(part), layout="partitioned")
-
-    for table in ("commits", "file_changes", "authors", "repos", "tags"):
-        a = spark.read.parquet(str(flat / table))
-        b = spark.read.parquet(str(part / table)).select(*a.columns)
-        assert sorted(map(repr, a.collect())) == sorted(map(repr, b.collect())), table
-
-    # incremental: new commit lands in proj-beta only
-    pdir = part / "commits" / "repo_name=proj-alpha"
-    before = sorted(
-        (f, _os.path.getsize(pdir / f), _os.stat(pdir / f).st_mtime_ns)
-        for f in _os.listdir(pdir) if not f.startswith(("_", "."))
-    )
-    _commit(
-        other, "Cara Coder", "cara@example.com", "2024-03-02T09:00:00+00:00",
-        "beta second", {"b2.py": "b = 2\n"},
-    )
-    etl_repos(spark, [str(other)], str(part), layout="partitioned")
-
-    after = sorted(
-        (f, _os.path.getsize(pdir / f), _os.stat(pdir / f).st_mtime_ns)
-        for f in _os.listdir(pdir) if not f.startswith(("_", "."))
-    )
-    assert after == before  # untouched repo partition never rewritten
-    commits = spark.read.parquet(str(part / "commits"))
-    assert commits.filter("repo_name = 'proj-beta'").count() == 2
+    old, new = crash_repos
+    out = tmp_path_factory.mktemp("crash-ref") / "wh"
+    etl_repos(spark, [str(old)], str(out))
+    first = _tables(spark, out)
+    etl_repos(spark, [str(new)], str(out))
+    return first, _tables(spark, out)
 
 
-def test_gitlog_datasource_matches_driver_side(spark, synthetic_repo):
-    """S1 as a Spark-4 Python DataSource: format("gitlog") must produce
-    exactly the driver-side result, schema included, and expose one
-    input partition per repository."""
-    from git_etl_spark.sources.git_log import repo_commits_df
-    from git_etl_spark.sources.gitlog_datasource import (
-        GitLogReader,
-        register_gitlog_source,
-    )
+@pytest.mark.parametrize("k", range(1, 6))
+def test_crash_at_kth_staging_write(
+    spark, crash_repos, crash_reference, tmp_path, monkeypatch, k
+):
+    """K6: a failure at the k-th of the five staging writes, on a first
+    run and on a rerun, leaves every table as it was before the run and
+    no staging directory behind; a clean rerun then yields the tables
+    of an uninterrupted run."""
+    from git_etl_spark.plans import git_pipeline
 
-    register_gitlog_source(spark)
-    a = repo_commits_df(spark, [str(synthetic_repo)])
-    b = spark.read.format("gitlog").load(str(synthetic_repo))
-    assert b.schema == a.schema
-    assert sorted(map(repr, b.collect())) == sorted(map(repr, a.collect()))
+    old, new = crash_repos
+    first, second = crash_reference
+    assert None not in second.values() and second != first
+    out = tmp_path / "wh"
+    real = git_pipeline.write_staging
+    calls = []
 
-    # branch option flows through the reader; partitions = repos
-    reader = GitLogReader({"paths": "/r/a,/r/b", "branch": "main"})
-    parts = reader.partitions()
-    assert [p.repo_path for p in parts] == ["/r/a", "/r/b"]
-    assert all(p.branch == "main" for p in parts)
+    def failing(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == k:
+            raise RuntimeError(f"injected failure at staging write {k}")
+        return real(*args, **kwargs)
 
-    # projection over the source composes like any other scan
-    n = (
-        spark.read.format("gitlog")
-        .load(str(synthetic_repo))
-        .groupBy("author_email")
-        .count()
-        .count()
-    )
-    assert n >= 1
+    absent = dict.fromkeys(git_pipeline.GIT_TABLES)
+    for repo, before, after in ((old, absent, first), (new, first, second)):
+        calls.clear()
+        monkeypatch.setattr(git_pipeline, "write_staging", failing)
+        with pytest.raises(RuntimeError, match="injected"):
+            git_pipeline.etl_repos(spark, [str(repo)], str(out))
+        monkeypatch.setattr(git_pipeline, "write_staging", real)
 
+        assert len(calls) == k
+        assert _tables(spark, out) == before
+        leftovers = set(os.listdir(out) if out.exists() else ())
+        leftovers -= set(git_pipeline.GIT_TABLES)
+        assert not leftovers, leftovers
 
-def test_gitlog_datasource_author_pushdown(spark, synthetic_repo):
-    """Author-equality pushdown: the filtered read must equal manual
-    post-filtering of the full scan (the git --author prefilter plus
-    the exact re-check can neither over- nor under-match), and
-    pushFilters must claim only the supported equality, yielding every
-    other filter back to Spark."""
-    from pyspark.sql.datasource import EqualTo, GreaterThan
-
-    from git_etl_spark.sources.gitlog_datasource import (
-        GitLogReader,
-        register_gitlog_source,
-    )
-
-    from pyspark.sql import functions as F
-
-    register_gitlog_source(spark)
-    base = spark.read.format("gitlog").load(str(synthetic_repo))
-    all_rows = base.collect()
-    emails = sorted({r.author_email for r in all_rows})
-    assert len(emails) >= 2, "fixture should have multiple authors"
-    target = emails[0]
-    pushed = base.filter(F.col("author_email") == target).collect()
-    manual = [r for r in all_rows if r.author_email == target]
-    assert sorted(map(repr, pushed)) == sorted(map(repr, manual))
-    assert 0 < len(pushed) < len(all_rows)
-
-    reader = GitLogReader({"paths": "/r/a"})
-    leftover = list(
-        reader.pushFilters(
-            [EqualTo(("author_email",), target), GreaterThan(("additions",), 0)]
-        )
-    )
-    assert len(leftover) == 1 and isinstance(leftover[0], GreaterThan)
-    assert reader.partitions()[0].author.endswith("$")
-
-
-def test_gitlog_datasource_numshards_equals_unsharded(spark, synthetic_repo):
-    """Monorepo sharding: numShards=k must produce exactly the unsharded
-    result (the disjoint --skip/--max-count windows partition the same
-    deterministic ordering), including shards interacting with author
-    pushdown — and must actually plan multiple input partitions."""
-    from pyspark.sql import functions as F
-
-    from git_etl_spark.sources.gitlog_datasource import (
-        GitLogReader,
-        register_gitlog_source,
-    )
-
-    register_gitlog_source(spark)
-    base = spark.read.format("gitlog").load(str(synthetic_repo))
-    expected = sorted(map(repr, base.collect()))
-    for k in (2, 3, 16):  # 16 > commit count: degenerate 1-commit shards
-        sharded = (
-            spark.read.format("gitlog")
-            .option("numShards", k)
-            .load(str(synthetic_repo))
-        )
-        assert sorted(map(repr, sharded.collect())) == expected, k
-
-    # shard planning: 4 commits / numShards=3 -> ceil -> 2 windows of 2
-    reader = GitLogReader({"paths": str(synthetic_repo), "numshards": 3})
-    parts = reader.partitions()
-    assert [(p.skip, p.max_count) for p in parts] == [(0, 2), (2, 2)]
-    assert all(p.branch == "main" for p in parts)
-
-    # sharding composes with author pushdown (count uses the same filter)
-    pushed = (
-        spark.read.format("gitlog")
-        .option("numShards", 2)
-        .load(str(synthetic_repo))
-        .filter(F.col("author_email") == "alice@example.com")
-    )
-    assert pushed.count() == base.filter(
-        F.col("author_email") == "alice@example.com"
-    ).count()
-
-
-def test_gitlog_author_pushdown_bre_special_chars(spark, tmp_path):
-    """Regression for the BRE-escaping bug: git compiles --author as a
-    POSIX/GNU basic regex where a backslash-prefixed '+' means
-    one-or-more, so re.escape-ing a plus-addressed email produced a
-    pattern matching ZERO commits — the pushdown silently dropped that
-    author's entire history. The fixture uses exactly that shape."""
-    from pyspark.sql import functions as F
-
-    from git_etl_spark.sources.gitlog_datasource import (
-        _bre_escape,
-        register_gitlog_source,
-    )
-
-    # unit: only bare BRE metacharacters get escaped; '+' '?' '|' '(' do not
-    assert _bre_escape("a+b?c|d(e") == "a+b?c|d(e"
-    assert _bre_escape(r"a.b[c*d^e$f\g") == r"a\.b\[c\*d\^e\$f\\g"
-
-    repo = tmp_path / "proj-plus"
-    repo.mkdir()
-    _git(repo, "init", "-q", "-b", "main")
-    _commit(
-        repo, "Alice Plus", "alice+git@example.com", "2024-02-01T10:00:00+00:00",
-        "plus-addressed commit", {"a.txt": "1\n"},
-    )
-    _commit(
-        repo, "Bob Dot", "bob.builder@example.com", "2024-02-02T10:00:00+00:00",
-        "dotted commit", {"b.txt": "2\n"},
-    )
-
-    register_gitlog_source(spark)
-    base = spark.read.format("gitlog").load(str(repo))
-    got = base.filter(F.col("author_email") == "alice+git@example.com").collect()
-    assert len(got) == 1 and got[0].author_name == "Alice Plus"
-    # escaping '.' must not break the match for a dotted email either
-    # (under-match is the failure direction the exact re-check can't fix)
-    dot = base.filter(F.col("author_email") == "bob.builder@example.com").collect()
-    assert len(dot) == 1 and dot[0].author_name == "Bob Dot"
+        git_pipeline.etl_repos(spark, [str(repo)], str(out))
+        assert _tables(spark, out) == after

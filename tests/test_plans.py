@@ -73,10 +73,13 @@ def test_theta_join_not_cartesian(spark):
 def test_sessionize_reuses_user_shuffle(spark):
     """Window + group-by on the same user_id key: one hash exchange on
     user_id total (Catalyst reuses the partitioning)."""
-    from git_etl_spark.plans.audit import physical_plan
+    from git_etl_spark.plans.audit import hash_exchanges
 
-    plan = physical_plan(_q(spark, "events_sessionize"))
-    assert plan.count("Exchange hashpartitioning(user_id") == 1, plan
+    exchanges = hash_exchanges(_q(spark, "events_sessionize"))
+    on_user = [
+        e for e in exchanges if e.startswith("Exchange hashpartitioning(user_id")
+    ]
+    assert len(on_user) == 1, exchanges
 
 
 def test_q1_fully_codegens(spark):
@@ -129,18 +132,21 @@ def test_q21_decorrelates_to_single_orderkey_exchange(spark):
     whole reduction, no self-joins, no exchange on the composite key
     (hashpartitioning(l_orderkey) satisfies the clustered distribution
     of the (l_orderkey, l_suppkey) groupBy)."""
-    import re
+    from git_etl_spark.plans.audit import hash_exchanges, physical_plan
 
-    from git_etl_spark.plans.audit import physical_plan
-
-    plan = physical_plan(_q(spark, "tpch_q21_waiting_suppliers"))
+    df = _q(spark, "tpch_q21_waiting_suppliers")
+    plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert "LeftSemi" not in plan and "LeftAnti" not in plan, plan
-    ok_exchanges = re.findall(r"Exchange hashpartitioning\(l_orderkey#", plan)
-    assert len(ok_exchanges) == 1, plan
-    assert not re.search(
-        r"Exchange hashpartitioning\(l_orderkey#\d+L?, l_suppkey", plan
-    ), plan
+    exchanges = hash_exchanges(df)
+    on_orderkey = [
+        e for e in exchanges if e.startswith("Exchange hashpartitioning(l_orderkey,")
+    ]
+    assert len(on_orderkey) == 1, exchanges
+    assert not any(
+        e.startswith("Exchange hashpartitioning(l_orderkey, l_suppkey")
+        for e in exchanges
+    ), exchanges
 
 
 def test_range_join_is_equi_bucketed(spark):
@@ -505,11 +511,14 @@ def test_max_concurrency_sweep_partitioned_by_day(spark):
     window partitioned by day over the boundaries (hashpartitioning on
     day) and exactly one explode generator (union-of-selects would
     evaluate the sessionize subtree twice)."""
-    from git_etl_spark.plans.audit import physical_plan
+    from git_etl_spark.plans.audit import hash_exchanges, physical_plan
 
-    plan = physical_plan(_q(spark, "events_max_concurrency"))
+    df = _q(spark, "events_max_concurrency")
+    plan = physical_plan(df)
     # the day-partitioned sweep shuffle
-    assert "hashpartitioning(day" in plan, plan
+    assert any(
+        e.startswith("Exchange hashpartitioning(day,") for e in hash_exchanges(df)
+    ), plan
     # one generator pass for both boundaries, not a double-scan union
     assert plan.count("Generate explode") == 1, plan
     assert "Union" not in plan, plan
@@ -544,14 +553,16 @@ def test_repetition_metrics_scan_spread_shared(spark):
     branches fused onto the single bench-local split. The plan must
     hash-exchange the documents scan on doc_id BELOW the explode
     (Generate), so the explode consumes spread rows."""
-    from git_etl_spark.plans.audit import physical_plan
+    from git_etl_spark.plans.audit import hash_exchanges, physical_plan
 
-    plan = physical_plan(_q(spark, "text_repetition_metrics"))
-    assert "hashpartitioning(doc_id" in plan, plan
-    gen_at = plan.index("Generate explode")
+    df = _q(spark, "text_repetition_metrics")
+    plan = physical_plan(df)
+    on_doc = "Exchange hashpartitioning(doc_id,"
+    assert any(e.startswith(on_doc) for e in hash_exchanges(df)), plan
     # tree prints parent-first: the spread exchange must appear below
     # (after) the Generate, between it and the scan
-    assert "hashpartitioning(doc_id" in plan[gen_at:], plan
+    below = hash_exchanges(df, below="Generate explode")
+    assert any(e.startswith(on_doc) for e in below), plan
 
 
 def test_keep_longest_is_partial_argmax_not_window(spark):
@@ -577,13 +588,14 @@ def test_bloom_probe_is_expression_not_regroup(spark):
     expression form removes outright (guide section 2.4). Gate on both
     halves: the one-row bitmap attaches via a broadcast nested-loop
     join, and no exchange is keyed on (doc_id, g)."""
-    import re
+    from git_etl_spark.plans.audit import hash_exchanges, physical_plan
 
-    from git_etl_spark.plans.audit import physical_plan
-
-    plan = physical_plan(_q(spark, "pipeline_decontamination_bloom"))
+    df = _q(spark, "pipeline_decontamination_bloom")
+    plan = physical_plan(df)
     assert "BroadcastNestedLoopJoin" in plan, plan
-    assert not re.search(r"hashpartitioning\(doc_id#\d+L?, g#", plan), plan
+    assert not any(
+        e.startswith("Exchange hashpartitioning(doc_id, g,") for e in hash_exchanges(df)
+    ), plan
 
 
 def test_ahash_candidates_single_decode_pass(spark):

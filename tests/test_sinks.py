@@ -129,57 +129,6 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     assert len(rows) == 6
 
 
-def _pdf(spark, rows):
-    return spark.createDataFrame(rows, "repo string, k string, v long")
-
-
-def _file_state(table_dir, partition):
-    """(name, size, mtime_ns) of every data file in one partition dir."""
-    pdir = os.path.join(table_dir, f"repo={partition}")
-    return sorted(
-        (f, os.path.getsize(os.path.join(pdir, f)),
-         os.stat(os.path.join(pdir, f)).st_mtime_ns)
-        for f in os.listdir(pdir)
-        if not f.startswith(("_", "."))
-    )
-
-
-def test_partitioned_upsert_touches_only_incoming_partitions(spark, tmp_path):
-    """The 100 TB merge path: after a single-repo incremental merge the
-    other repo's partition files are byte-identical (same names, sizes,
-    mtimes — never rewritten, not merely equal content)."""
-    from git_etl_spark.sinks.upsert import upsert_parquet_partitioned
-
-    path = str(tmp_path / "t")
-    upsert_parquet_partitioned(
-        spark,
-        _pdf(spark, [("r1", "a", 1), ("r1", "b", 1), ("r2", "x", 1)]),
-        path, ["repo", "k"], "repo",
-    )
-    untouched_before = _file_state(path, "r2")
-
-    upsert_parquet_partitioned(
-        spark, _pdf(spark, [("r1", "a", 2), ("r1", "c", 1)]),
-        path, ["repo", "k"], "repo",
-    )
-    assert _file_state(path, "r2") == untouched_before
-
-    rows = {(r.repo, r.k): r.v for r in spark.read.parquet(path).collect()}
-    assert rows == {
-        ("r1", "a"): 2, ("r1", "b"): 1, ("r1", "c"): 1, ("r2", "x"): 1,
-    }
-
-
-def test_partitioned_upsert_requires_partition_in_key(spark, tmp_path):
-    from git_etl_spark.sinks.upsert import upsert_parquet_partitioned
-
-    with pytest.raises(ValueError, match="natural key"):
-        upsert_parquet_partitioned(
-            spark, _pdf(spark, [("r1", "a", 1)]), str(tmp_path / "t"),
-            ["k"], "repo",
-        )
-
-
 def test_within_batch_duplicate_keys_last_row_wins(spark, tmp_path):
     """ADVICE: within-batch conflicts resolve positionally like the
     reference's sequential SQLite inserts — last occurrence wins for

@@ -268,50 +268,6 @@ def test_foreachbatch_upsert_idempotent_replay(spark, events_dir, tmp_path):
     assert once == batch
 
 
-def test_foreachbatch_partitioned_upsert(spark, events_dir, tmp_path):
-    """Partition-scoped streaming lake sink: same idempotent replay
-    guarantee through upsert_parquet_partitioned, table laid out by
-    event_type, contents equal to the batch distinct."""
-    from git_etl_spark.io import load_table
-    from git_etl_spark.streaming.events_stream import stream_upsert_to_parquet
-
-    target = str(tmp_path / "events_part")
-
-    def run(cp):
-        q = stream_upsert_to_parquet(
-            spark,
-            _stream(spark, events_dir),
-            target,
-            str(tmp_path / cp),
-            natural_key=["event_type", "event_id"],
-            partition_col="event_type",
-        )
-        q.awaitTermination(120)
-
-    run("cp1")
-    import os as _os
-
-    assert any(f.startswith("event_type=") for f in _os.listdir(target))
-    once = sorted(
-        map(repr, spark.read.parquet(target).select("event_id", "event_type").collect())
-    )
-    run("cp2")  # full redelivery, fresh checkpoint
-    twice = sorted(
-        map(repr, spark.read.parquet(target).select("event_id", "event_type").collect())
-    )
-    assert once == twice
-    batch = sorted(
-        map(
-            repr,
-            load_table(spark, SF_SMOKE, "events")
-            .dropDuplicates(["event_id"])
-            .select("event_id", "event_type")
-            .collect(),
-        )
-    )
-    assert once == batch
-
-
 def test_transform_with_state_env_gap():
     """Spark 4's transformWithStateInPandas (the successor stateful API
     to applyInPandasWithState) requires google.protobuf for its state
