@@ -82,11 +82,10 @@ def dataset_fingerprint(sf_dir: str, *names: str) -> str:
     """Content-change fingerprint of one or more corpus tables under
     ``sf_dir``: sorted (relpath, mtime_ns, size) triples per table.
 
-    Session-lifetime memo caches (checkpointed pair graphs, written
-    format copies, streaming replay sources) key on this in addition
-    to (applicationId, sf_dir) so regenerating the data under a reused
-    path — e.g. a test tmp dir — changes the key instead of serving
-    stale results. Bounded growth: one entry per distinct
+    ``session.session_artifact`` keys on this in addition to
+    (applicationId, kind, sf_dir) so regenerating the data under a
+    reused path — e.g. a test tmp dir — changes the key instead of
+    serving stale results. Bounded growth: one entry per distinct
     content-version actually read in the process lifetime."""
     parts: list[str] = []
     for name in names:

@@ -26,9 +26,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import norm
-from ..io import dataset_fingerprint, load_table
+from ..io import load_table
 from ..registry import query
-from ..session import iter_checkpoint, loop_shuffle_partitions, memo_disabled
+from ..session import iter_checkpoint, loop_shuffle_partitions, session_artifact
 
 # DuckDB twin of functions.vector.norm over the raw embedding column
 _DUCK_NORM = (
@@ -380,34 +380,24 @@ def _length_filter(
     return F.least(sz_a, sz_b) * F.lit(den) >= F.greatest(sz_a, sz_b) * F.lit(num)
 
 
-# d is one scalar derived from a full-scan max over the corpus's token
-# sets, and every pair-pipeline consumer used to re-pay that scan in a
-# multi-query session (five consumers × parity sweeps) — memoize per
-# (applicationId, sf_dir, documents fingerprint) like the other
-# session-lifetime memos (VERDICT r13 task 6). The reps-vs-all-sets
-# call sites deliberately share one entry: every distinct-set group's
-# rep carries toks identical to its members', so max(size(toks))
-# agrees by construction. The fingerprint keys out underlying-file
-# changes; memo_disabled() bypasses, same as _REP_GRAPH_MEMO.
-_CORPUS_D_MEMO: dict[tuple[str, str, str], int] = {}
-
-
 def _corpus_deletion_distance(
     spark: SparkSession, sf_dir: str, sets: DataFrame
 ) -> int:
-    """Derive d from the data (max token-set size), never assume it."""
-    key = (
-        spark.sparkContext.applicationId,
+    """Derive d from the data (max token-set size), never assume it.
+
+    Session artifact, consumed by the rep graph and
+    dedup_incremental_index_join. The reps-vs-all-sets call sites share
+    one entry: every distinct-set group's rep carries toks identical
+    to its members', so max(size(toks)) agrees by construction."""
+    return session_artifact(
+        spark,
+        "corpus-d",
         sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
+        ("documents",),
+        lambda: _deletion_distance(
+            sets.agg(F.max(F.size("toks"))).collect()[0][0] or 1
+        ),
     )
-    if not memo_disabled() and key in _CORPUS_D_MEMO:
-        return _CORPUS_D_MEMO[key]
-    max_sz = sets.agg(F.max(F.size("toks"))).collect()[0][0]
-    d = _deletion_distance(max_sz or 1)
-    if not memo_disabled():
-        _CORPUS_D_MEMO[key] = d
-    return d
 
 
 def _rep_graph_impl(
@@ -470,30 +460,19 @@ def _rep_graph_impl(
     return members, rep_pairs
 
 
-# The collapsed graph feeds both the registered pair query and the
-# connected-components clustering that runs in the same session —
-# memoize one checkpointed copy per (session, sf_dir) so candidate
-# generation + verification execute once, not once per consumer. Tiny
-# by construction (distinct sets + verified rep pairs), so pinning is
-# safe.
-_REP_GRAPH_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _rep_graph_materialized(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    pair = None if memo_disabled() else _REP_GRAPH_MEMO.get(key)
-    if pair is None:
+    """Session artifact, consumed by dedup_jaccard_pairs and
+    dedup_cluster_components: one checkpointed copy of the
+    collapsed graph, tiny by construction (distinct sets + verified rep
+    pairs)."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
         members, rep_pairs = _rep_graph_impl(spark, sf_dir)
-        pair = (members.localCheckpoint(), rep_pairs.localCheckpoint())
-        if not memo_disabled():
-            _REP_GRAPH_MEMO[key] = pair
-    return pair
+        return members.localCheckpoint(), rep_pairs.localCheckpoint()
+
+    return session_artifact(spark, "rep-graph", sf_dir, ("documents",), build)
 
 
 @query(
@@ -516,9 +495,8 @@ def _rep_graph_materialized(
 )
 def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (cos ≥ 0.35 — calibrated
-    to this corpus's near-random vectors). The verified pair set is
-    memoized per (session, sf_dir) — the semantic-clustering query
-    consumes the same pairs in the same session (`_COS_PAIRS_MEMO`).
+    to this corpus's near-random vectors). The verified pair set is a
+    session artifact, consumed by this query and dedup_semantic_clusters.
 
     This is the EXACT tier (all pairs scored). At this calibrated-low
     threshold that is not a compromise: ~1% of ALL pairs qualify on
@@ -545,26 +523,16 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB the same normalized-columnar layout feeds LSH/IVF bucket
     joins (see simsearch_lsh_bucketed); only the blocking changes."""
-    memo_key = (
-        spark.sparkContext.applicationId,
+    return session_artifact(
+        spark,
+        "cosine-pairs",
         sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
+        ("embeddings",),
+        # tiny (near-dup pairs only)
+        lambda: _exact_cosine_pairs(
+            spark, sf_dir, COSINE_DUP_THRESHOLD
+        ).localCheckpoint(),
     )
-    memoized = None if memo_disabled() else _COS_PAIRS_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
-
-    pairs = _exact_cosine_pairs(
-        spark, sf_dir, COSINE_DUP_THRESHOLD
-    ).localCheckpoint()  # tiny (near-dup pairs only); reused by the
-    # semantic-clustering consumer in the same session
-    if not memo_disabled():
-        _COS_PAIRS_MEMO[memo_key] = pairs
-    return pairs
-
-
-# verified cosine pair set per (session, sf_dir) — see docstring above
-_COS_PAIRS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 EMBED_DIM = 64
 
@@ -1174,7 +1142,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SIMHASH_HAMMING_RADIUS = 3  # pairs within 3 of 48 bits are near-dups
-_SIMHASH_PAIRS_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 SIMHASH_BANDS = SIMHASH_HAMMING_RADIUS + 1  # pigeonhole: ≥1 exact band
 _SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 12
 
@@ -1206,15 +1173,18 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never corpus², and the band key is a shuffle key — AQE skew
     splitting applies if one bucket runs hot. The DuckDB oracle *is*
     the O(n²) definition, so the banding is proved lossless on every
-    run, not assumed."""
-    memo_key = (
-        spark.sparkContext.applicationId,
+    run, not assumed. The verified pairs are a session artifact,
+    consumed by this query and dedup_simhash_clusters."""
+    return session_artifact(
+        spark,
+        "simhash-pairs",
         sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
+        ("documents",),
+        lambda: _simhash_pairs(spark, sf_dir),
     )
-    memoized = None if memo_disabled() else _SIMHASH_PAIRS_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
+
+
+def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     sigs = _simhash_sig_df(docs)
     mask = (1 << _SIMHASH_BAND_BITS) - 1
@@ -1242,19 +1212,15 @@ def dedup_simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    pairs = (
+    return (
         cand.withColumn(
             "hamming",
             F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).cast("long"),
         )
         .filter(F.col("hamming") <= SIMHASH_HAMMING_RADIUS)
         .select("doc_a", "doc_b", "hamming")
-        .localCheckpoint()  # tiny (verified near-dup pairs); reused by
-        # the cluster consumer in the same session
+        .localCheckpoint()  # tiny (verified near-dup pairs)
     )
-    if not memo_disabled():
-        _SIMHASH_PAIRS_MEMO[memo_key] = pairs
-    return pairs
 
 
 def _minhash_coefficients() -> list[tuple[int, int]]:
@@ -1594,15 +1560,18 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration is verified against declarative ground truth. At 100 TB
     swap simple propagation for large-star/small-star — same per-round
     join shape, provably O(log n) rounds — and checkpoint to reliable
-    storage."""
-    memo_key = (
-        spark.sparkContext.applicationId,
+    storage. The labels are a session artifact, consumed by this query
+    and pipeline_leakage_safe_split."""
+    return session_artifact(
+        spark,
+        "cluster-labels",
         sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
+        ("documents",),
+        lambda: _cluster_labels(spark, sf_dir),
     )
-    memoized = None if memo_disabled() else _CLUSTER_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
+
+
+def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     members, rep_pairs = _rep_graph_materialized(spark, sf_dir)
     edges = rep_pairs.select(F.col("key_a").alias("a"), F.col("key_b").alias("b"))
     sym = edges.unionByName(
@@ -1670,19 +1639,11 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             # engine is diameter-independent, so escalate instead of
             # failing the query
             labels = _ls_ss_labels()
-    result = (
+    return (
         members.join(labels, "set_key")
         .select(F.col("doc_id"), F.col("lbl").alias("cluster_id"))
-        .localCheckpoint()  # converged labels; reused by the
-        # leakage-safe split consumer in the same session
+        .localCheckpoint()  # converged labels
     )
-    if not memo_disabled():
-        _CLUSTER_MEMO[memo_key] = result
-    return result
-
-
-# converged cluster labels per (session, sf_dir)
-_CLUSTER_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 MIN_LABEL_MAX_ROUNDS = 20
@@ -1916,31 +1877,11 @@ def semantic_clusters(
     if edge_source == "blocked":
         pairs = blocked_cosine_pairs(spark, sf_dir, threshold, **lsh_kwargs)
     elif threshold == COSINE_DUP_THRESHOLD:
-        # default registered path: pairs AND converged labels are both
-        # memoized per (session, sf_dir) — same reuse policy as the
-        # Jaccard family's _CLUSTER_MEMO (the labels are deterministic
-        # given the memoized pair set, and label propagation's per-round
-        # fixed cost dominates re-runs within a session)
-        memo_key = (
-            spark.sparkContext.applicationId,
-            sf_dir,
-            dataset_fingerprint(sf_dir, "embeddings"),
-        )
-        memoized = None if memo_disabled() else _SEM_CLUSTER_MEMO.get(memo_key)
-        if memoized is not None:
-            return memoized
-        pairs = dedup_embedding_cosine_pairs(spark, sf_dir)  # memoized
-        result = _cluster_vec_pairs(spark, pairs).localCheckpoint()
-        if not memo_disabled():
-            _SEM_CLUSTER_MEMO[memo_key] = result
-        return result
+        # the registered path: the cosine-pairs session artifact
+        pairs = dedup_embedding_cosine_pairs(spark, sf_dir)
     else:
         pairs = _exact_cosine_pairs(spark, sf_dir, threshold)
     return _cluster_vec_pairs(spark, pairs)
-
-
-# converged semantic-cluster labels per (session, sf_dir), default path
-_SEM_CLUSTER_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def _cluster_vec_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:

@@ -3,8 +3,8 @@
 The engine's canonical storage is Parquet, but a 100 TB ingest estate
 also lands JSONL and CSV (crawl dumps, export feeds). These queries
 prove the OTHER text formats round-trip losslessly through Spark's
-readers: the documents table is written once per session in the target
-format, read back with an EXPLICIT schema (inference is a full extra
+readers: the documents table is written in the target format to a
+scratch dir (removed at interpreter exit), read back with an EXPLICIT schema (inference is a full extra
 pass over 100 TB — never on by design), and every row is
 value-verified against the original parquet via the DuckDB oracle,
 including an md5 over the free-text column so escaping/quoting bugs
@@ -28,39 +28,13 @@ raw newlines for JSONL.
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io import dataset_fingerprint, load_table
+from ..io import load_table
 from ..registry import query
-from ..session import memo_disabled
-
-# one written copy per (session, sf_dir, format); removed at exit like
-# the streaming replay sources
-_FMT_MEMO: dict[tuple[str, str, str, str], str] = {}
-# dirs written while SPARK_GRAFT_DISABLE_MEMO=1 skips the memo PUT:
-# never reused, but still deleted at exit — per-solve measurement
-# loops must not accumulate full-table copies in /tmp
-_FMT_EXTRA_DIRS: list[str] = []
-
-
-def _cleanup_fmt_dirs() -> None:
-    for path in _FMT_MEMO.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _FMT_MEMO.clear()
-    for path in _FMT_EXTRA_DIRS:
-        shutil.rmtree(path, ignore_errors=True)
-    _FMT_EXTRA_DIRS.clear()
-
-
-atexit.register(_cleanup_fmt_dirs)
+from ..session import scratch_dir
 
 _DOC_SCHEMA = T.StructType(
     [
@@ -125,58 +99,46 @@ def _estate_decode(col):
 
 
 def _written_copy(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        fmt,
-        dataset_fingerprint(sf_dir, "documents"),
+    """A fresh ``fmt`` copy of documents in a scratch dir; each query
+    call writes its own."""
+    path = scratch_dir(f"fmt-{fmt}")
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
     )
-    path = None if memo_disabled() else _FMT_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(), f"ges-fmt-{fmt}-{uuid.uuid4().hex[:8]}"
-        )
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        )
-        if fmt in ("csv", "xml"):
-            # the estate encoding above: framing-hostile bytes leave
-            # the free-text payload before the framed writer sees them
-            docs = docs.withColumn("text", _estate_encode(F.col("text")))
-        writer = docs.repartition(4).write.mode("overwrite")
-        if fmt == "json":
-            writer.json(path)
-        elif fmt == "orc":
-            writer.orc(path)
-        elif fmt == "csv":
-            # header off (schema is explicit); full quoting with "" as
-            # the in-field quote escape; whitespace trimming OFF (the
-            # writer default silently trims padded fields); null
-            # sentinel \N so quoted-empty "" stays an empty STRING and
-            # only the sentinel reads back as NULL — the reader mirrors
-            # every one of these (see source_csv_roundtrip)
-            writer.options(
-                header=False,
-                quoteAll=True,
-                escape='"',
-                ignoreLeadingWhiteSpace=False,
-                ignoreTrailingWhiteSpace=False,
-                nullValue="\\N",
-            ).csv(path)
-        elif fmt == "xml":
-            # built-in XML source (merged into Spark 4): one <doc>
-            # element per row; values land in child elements, where
-            # whitespace-significant free text survives verbatim
-            # (attributes would XML-collapse it)
-            writer.format("xml").options(
-                rootTag="docs", rowTag="doc", declaration=""
-            ).save(path)
-        else:  # pragma: no cover - guarded by callers
-            raise ValueError(fmt)
-        if memo_disabled():
-            _FMT_EXTRA_DIRS.append(path)
-        else:
-            _FMT_MEMO[key] = path
+    if fmt in ("csv", "xml"):
+        # the estate encoding above: framing-hostile bytes leave
+        # the free-text payload before the framed writer sees them
+        docs = docs.withColumn("text", _estate_encode(F.col("text")))
+    writer = docs.repartition(4).write.mode("overwrite")
+    if fmt == "json":
+        writer.json(path)
+    elif fmt == "orc":
+        writer.orc(path)
+    elif fmt == "csv":
+        # header off (schema is explicit); full quoting with "" as
+        # the in-field quote escape; whitespace trimming OFF (the
+        # writer default silently trims padded fields); null
+        # sentinel \N so quoted-empty "" stays an empty STRING and
+        # only the sentinel reads back as NULL — the reader mirrors
+        # every one of these (see source_csv_roundtrip)
+        writer.options(
+            header=False,
+            quoteAll=True,
+            escape='"',
+            ignoreLeadingWhiteSpace=False,
+            ignoreTrailingWhiteSpace=False,
+            nullValue="\\N",
+        ).csv(path)
+    elif fmt == "xml":
+        # built-in XML source (merged into Spark 4): one <doc>
+        # element per row; values land in child elements, where
+        # whitespace-significant free text survives verbatim
+        # (attributes would XML-collapse it)
+        writer.format("xml").options(
+            rootTag="docs", rowTag="doc", declaration=""
+        ).save(path)
+    else:  # pragma: no cover - guarded by callers
+        raise ValueError(fmt)
     return path
 
 
@@ -205,7 +167,7 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def source_partitioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB layout story as a verified query: documents written
-    once per session as a lang-partitioned parquet estate
+    as a lang-partitioned parquet estate
     (``partitionBy`` → one directory per lang), then read back with a
     partition filter. Catalyst prunes to the matching directories —
     the scan never opens the other partitions' files (asserted in
@@ -214,24 +176,10 @@ def source_partitioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFram
     directory names, which is exactly what makes low-cardinality
     columns (lang, date, source) the right partition keys and
     high-cardinality ones a small-files disaster."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "part",
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    path = None if memo_disabled() else _FMT_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(), f"ges-fmt-part-{uuid.uuid4().hex[:8]}"
-        )
-        load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        ).write.mode("overwrite").partitionBy("lang").parquet(path)
-        if memo_disabled():
-            _FMT_EXTRA_DIRS.append(path)
-        else:
-            _FMT_MEMO[key] = path
+    path = scratch_dir("fmt-part")
+    load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
+    ).write.mode("overwrite").partitionBy("lang").parquet(path)
     # explicit schema: an EMPTY estate (zero partition directories —
     # e.g. a fresh date slice) has nothing to infer from and
     # inference-based reads die with UNABLE_TO_INFER_SCHEMA; a
@@ -344,51 +292,37 @@ def source_jsonl_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataF
 
     Scale: one line-delimited (splittable) scan; quarantine is a
     per-row projection, no extra pass."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "json-corrupt",
-        dataset_fingerprint(sf_dir, "documents"),
+    path = scratch_dir("fmt-corrupt")
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source", "n_chars"
     )
-    path = None if memo_disabled() else _FMT_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(), f"ges-fmt-corrupt-{uuid.uuid4().hex[:8]}"
-        )
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text", "lang", "source", "n_chars"
-        )
-        # lang serializes FIRST: the audit regex recovers each broken
-        # record's lang from the wreckage, so the lang field must
-        # always survive the truncation. With doc_id first, a 19+
-        # digit doc_id pushed lang's closing quote past the 40-char
-        # cut and the corrupt row silently fell into the NULL-lang
-        # group while the oracle counted its true lang (r14 ADVICE).
-        line = F.to_json(F.struct("lang", "doc_id", "source", "n_chars", "text"))
-        # cut point: ≥40 chars, but never before lang's closing quote
-        # ({"lang":" is 9 bytes, value, quote at len(lang)+10 — the
-        # greatest() guard makes the rule total for ANY lang length;
-        # greatest skips the NULL arm when lang is NULL, where to_json
-        # omits the field and regex no-match → NULL group is correct),
-        # and always ≤ length-1 so the closing brace is severed and
-        # the line is undeniably invalid JSON. A NULL-text row
-        # serializes to ~26 chars (to_json omits null fields), where a
-        # flat 40-char cap was a NO-OP and the "corrupt" line stayed
-        # valid — the r14 null-heavy full-oracle sweep caught the rule
-        # silently not firing; length-1 keeps it total.
-        cut = F.least(
-            F.greatest(F.lit(40), F.length(F.col("lang")) + F.lit(10)),
-            F.length(line) - F.lit(1),
-        )
-        broken = F.when(
-            F.col("doc_id") % CORRUPT_MOD == 0,
-            line.substr(F.lit(1), cut),
-        ).otherwise(line)
-        docs.select(broken.alias("value")).write.mode("overwrite").text(path)
-        if memo_disabled():
-            _FMT_EXTRA_DIRS.append(path)
-        else:
-            _FMT_MEMO[key] = path
+    # lang serializes FIRST: the audit regex recovers each broken
+    # record's lang from the wreckage, so the lang field must
+    # always survive the truncation. With doc_id first, a 19+
+    # digit doc_id pushed lang's closing quote past the 40-char
+    # cut and the corrupt row silently fell into the NULL-lang
+    # group while the oracle counted its true lang (r14 ADVICE).
+    line = F.to_json(F.struct("lang", "doc_id", "source", "n_chars", "text"))
+    # cut point: ≥40 chars, but never before lang's closing quote
+    # ({"lang":" is 9 bytes, value, quote at len(lang)+10 — the
+    # greatest() guard makes the rule total for ANY lang length;
+    # greatest skips the NULL arm when lang is NULL, where to_json
+    # omits the field and regex no-match → NULL group is correct),
+    # and always ≤ length-1 so the closing brace is severed and
+    # the line is undeniably invalid JSON. A NULL-text row
+    # serializes to ~26 chars (to_json omits null fields), where a
+    # flat 40-char cap was a NO-OP and the "corrupt" line stayed
+    # valid — the r14 null-heavy full-oracle sweep caught the rule
+    # silently not firing; length-1 keeps it total.
+    cut = F.least(
+        F.greatest(F.lit(40), F.length(F.col("lang")) + F.lit(10)),
+        F.length(line) - F.lit(1),
+    )
+    broken = F.when(
+        F.col("doc_id") % CORRUPT_MOD == 0,
+        line.substr(F.lit(1), cut),
+    ).otherwise(line)
+    docs.select(broken.alias("value")).write.mode("overwrite").text(path)
     schema = (
         "doc_id LONG, lang STRING, source STRING, n_chars LONG, text STRING,"
         " _corrupt_record STRING"

@@ -21,16 +21,8 @@ from pyspark.sql import functions as F
 
 from ..io import dataset_fingerprint, load_table
 from ..registry import query
-from ..session import memo_disabled
 
 N_BUCKETS = 8
-
-# bucketed-table pairs per (session, sf_dir, data fingerprint): the
-# clustering write is the one-time standing investment — every query
-# against the layout reuses it (exactly how a production lake amortizes
-# a bucketed CTAS across a reporting workload). Table names embed the
-# fingerprint so regenerated data can't serve stale buckets.
-_BUCKETED_MEMO: dict[tuple[str, str, str], tuple[str, str]] = {}
 
 
 def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -41,10 +33,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     fp = hashlib.md5(
         dataset_fingerprint(sf_dir, "lineitem", "orders").encode()
     ).hexdigest()[:12]
-    memo_key = (spark.sparkContext.applicationId, sf_dir, fp)
-    memoized = None if memo_disabled() else _BUCKETED_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
     li_name, o_name = f"li_bucketed_{fp}", f"o_bucketed_{fp}"
     # the session catalog is in-memory but the warehouse directory is
     # durable: a previous PROCESS may have left the table location on
@@ -64,8 +52,6 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     load_table(spark, sf_dir, "orders").write.bucketBy(
         N_BUCKETS, "o_orderkey"
     ).sortBy("o_orderkey").mode("overwrite").saveAsTable(o_name)
-    if not memo_disabled():
-        _BUCKETED_MEMO[memo_key] = (li_name, o_name)
     return li_name, o_name
 
 
@@ -83,8 +69,7 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 )
 def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact-fact join over bucketed layout: lineitem and orders are
-    written ``bucketBy(8, key) sortBy(key)`` once per dataset (session
-    memo — the amortized standing investment), after which the
+    written ``bucketBy(8, key) sortBy(key)``, after which the
     orderkey equi-join is co-partitioned AND co-sorted: no exchange,
     no sort, straight to the merge. The query asserts that property on
     the actual physical plan (≤1 exchange — the only one allowed is

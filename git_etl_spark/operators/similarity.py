@@ -29,9 +29,9 @@ from ..functions.vector import (
     py_dec14,
     sum14,
 )
-from ..io import dataset_fingerprint, load_table
+from ..io import load_table
 from ..registry import query
-from ..session import iter_checkpoint, loop_shuffle_partitions, memo_disabled
+from ..session import iter_checkpoint, loop_shuffle_partitions, session_artifact
 
 TOP_K = 5
 N_QUERIES = 10  # query set = vec_id < 10
@@ -221,31 +221,14 @@ K_CELLS = 16  # IVF coarse cells
 N_PROBE = 2  # cells searched per query
 
 
-# trained IVF index (centroids, posting list) per (session, sf_dir,
-# data fingerprint): an ANN index is a persisted artifact queried many
-# times, not rebuilt per query — the default-probe and full-probe
-# surfaces (and repeated runs in one session) share one training job.
-# Both component DataFrames are checkpointed (lineage-free) and small
-# (K·dim centroids, one (vec_id, cell) row per vector).
-_IVF_INDEX_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Train (or fetch the session-memoized) IVF index: Lloyd k-means
-    centroids plus the per-vector cell posting list. See ivf_topk for
-    the algorithm and determinism contract."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
+    """The trained IVF index: Lloyd k-means centroids plus the
+    per-vector cell posting list, both checkpointed and small. Session
+    artifact, consumed by simsearch_ivf and simsearch_ivf_full_probe.
+    See ivf_topk for the algorithm and determinism contract."""
+    return session_artifact(
+        spark, "ivf-index", sf_dir, ("embeddings",), lambda: _ivf_train(spark, sf_dir)
     )
-    memoized = None if memo_disabled() else _IVF_INDEX_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
-    centroids, posting = _ivf_train(spark, sf_dir)
-    if not memo_disabled():
-        _IVF_INDEX_MEMO[memo_key] = (centroids, posting)
-    return centroids, posting
 
 
 def ivf_topk(spark: SparkSession, sf_dir: str, n_probe: int = N_PROBE) -> DataFrame:
@@ -478,12 +461,6 @@ def _pq_l2(a, b):
     )
 
 
-# trained PQ index (codebooks, codes) per (session, sf_dir, data
-# fingerprint) — same artifact-reuse rationale as _IVF_INDEX_MEMO:
-# the ADC and full-re-rank surfaces query one trained quantizer.
-_PQ_INDEX_MEMO: dict[tuple[str, str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def pq_codebooks_and_codes(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -494,16 +471,14 @@ def pq_codebooks_and_codes(
     All PQ_M subspaces train **concurrently in one plan** — the Lloyd
     round is a single job keyed by (m, code), not a per-subspace loop —
     so the round count, not the subspace count, bounds the number of
-    shuffles."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "embeddings"),
+    shuffles. Session artifact, consumed by simsearch_pq_adc and
+    simsearch_pq_full_rerank."""
+    return session_artifact(
+        spark, "pq-codebooks", sf_dir, ("embeddings",), lambda: _pq_train(spark, sf_dir)
     )
-    memoized = None if memo_disabled() else _PQ_INDEX_MEMO.get(memo_key)
-    if memoized is not None:
-        return memoized
-    emb = load_table(spark, sf_dir, "embeddings")
+
+
+def _pq_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     sub_dim = 64 // PQ_M
     # (vec_id, m, sv): the m-th contiguous sub_dim-slice, cast double
     subvecs = (
@@ -571,8 +546,6 @@ def pq_codebooks_and_codes(
         .filter(F.col("rn") == 1)
         .select("vec_id", "m", "code")
     )
-    if not memo_disabled():
-        _PQ_INDEX_MEMO[memo_key] = (codebooks, codes)
     return codebooks, codes
 
 

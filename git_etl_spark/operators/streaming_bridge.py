@@ -12,43 +12,17 @@ every batch operator (not just a rows-only smoke check).
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
-from ..io import dataset_fingerprint, load_table, table_path
+from ..io import load_table, table_path
 from ..registry import query
-from ..session import memo_disabled
+from ..session import scratch_dir, session_artifact
 from ..streaming.events_stream import hourly_counts, sessionized
-
-# replay source parquet per (session, sf_dir): written once, reused by
-# every streaming replay query in the session, deleted at interpreter
-# exit (the memo outlives any one query, so per-query cleanup would
-# defeat it — but the temp dirs must not accumulate across sessions).
-# _SINK_DIRS holds the per-run materialized sink outputs (the replay
-# result lives in executor-written parquet, never on the driver) and
-# is cleaned up the same way.
-_SRC_MEMO: dict[tuple[str, str, str, int], str] = {}
-_SINK_DIRS: list[str] = []
-
-
-def _cleanup_replay_sources() -> None:
-    import shutil
-
-    for path in _SRC_MEMO.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _SRC_MEMO.clear()
-    for path in _SINK_DIRS:
-        shutil.rmtree(path, ignore_errors=True)
-    _SINK_DIRS.clear()
-
-
-import atexit  # noqa: E402  (registration belongs right next to the memo)
-
-atexit.register(_cleanup_replay_sources)
 
 
 def _replay_partitions(
@@ -75,12 +49,7 @@ def _replay_partitions(
       10.2 s flat; sizing gives 5.4 s at 16-23 partitions and the A/B
       curve kept improving to 3.7 s at 32 — the fold is Arrow+pandas
       CPU, the opposite cost shape from the JVM state stores.
-
-    ``SPARK_GRAFT_REPLAY_PARTITIONS`` overrides both for experiments.
     """
-    env = os.environ.get("SPARK_GRAFT_REPLAY_PARTITIONS")
-    if env:
-        return int(env)
     if not sized:
         return 4
     path = table_path(sf_dir, "events")
@@ -98,40 +67,28 @@ def _replay_partitions(
     )
 
 
-def _replay_source(
-    spark: SparkSession, sf_dir: str, events: DataFrame, n_parts: int
-) -> str:
-    """The replay source parquet is identical for every streaming query
-    over the same (session, sf_dir) — write it once and reuse.
-    ``n_parts`` files so the file-source pre-shuffle stage has as many
-    splits as the stateful stage has partitions. ``n_parts`` is part of
-    the memo key: it is usually derived from sf_dir, but the
-    ``SPARK_GRAFT_REPLAY_PARTITIONS`` experiment knob can change it
-    mid-session, and a memoized source written with the old file count
-    would silently defeat the splits-match-partitions intent."""
-    import uuid as _uuid
+def _replay_source(spark: SparkSession, sf_dir: str) -> str:
+    """The events table as replay source parquet, written in
+    volume-sized file count so the file-source pre-shuffle stage has
+    splits. Session artifact, consumed by every ``_replay`` query and
+    streaming_foreachbatch_upsert_replay."""
 
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "events"),
-        n_parts,
-    )
-    src_dir = None if memo_disabled() else _SRC_MEMO.get(memo_key)
-    if src_dir is None:
-        src_dir = os.path.join(
-            tempfile.gettempdir(), f"ges-stream-{_uuid.uuid4().hex[:8]}"
-        )
-        events.repartition(n_parts).write.parquet(src_dir)
-        if memo_disabled():
-            # the knob skips the memo PUT, but the dir must still die
-            # with the interpreter — park it on the unconditional
-            # cleanup list, else repeated per-solve measurement runs
-            # accumulate full-table copies in /tmp
-            _SINK_DIRS.append(src_dir)
-        else:
-            _SRC_MEMO[memo_key] = src_dir
-    return src_dir
+    def build() -> str:
+        path = scratch_dir("stream")
+        load_table(spark, sf_dir, "events").repartition(
+            _replay_partitions(spark, sf_dir, sized=True)
+        ).write.parquet(path)
+        return path
+
+    return session_artifact(spark, "replay-source", sf_dir, ("events",), build)
+
+
+def _await_replay(q: StreamingQuery) -> None:
+    """Wait for an availableNow replay to drain. One still running at
+    the timeout is stopped and raised, never read half-done."""
+    if not q.awaitTermination(300):
+        q.stop()
+        raise TimeoutError(f"streaming replay {q.name or q.id} ran past 300 s")
 
 
 def _replay(
@@ -154,17 +111,14 @@ def _replay(
     shuffle count comes from _replay_partitions — pinned 4 for JVM
     state (measured optimum at BOTH corpus scales), source-volume-
     sized for Python-CPU-bound folds (``sized_partitions=True``); see
-    that docstring for the r11 A/B numbers behind the split. The
-    source parquet is always written volume-sized so the pre-shuffle
-    scan has splits regardless of which class reads it first."""
+    that docstring for the r11 A/B numbers behind the split."""
     events = load_table(spark, sf_dir, "events")
-    run_id = uuid.uuid4().hex[:8]
     n_parts = _replay_partitions(spark, sf_dir, sized=sized_partitions)
-    src_dir = _replay_source(
-        spark, sf_dir, events, _replay_partitions(spark, sf_dir, sized=True)
+    stream = spark.readStream.schema(events.schema).parquet(
+        _replay_source(spark, sf_dir)
     )
-    stream = spark.readStream.schema(events.schema).parquet(src_dir)
-    name = f"stream_replay_{run_id}"
+    name = f"stream_replay_{uuid.uuid4().hex[:8]}"
+    sink_dir = scratch_dir("sink")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
@@ -176,18 +130,17 @@ def _replay(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        _await_replay(q)
+        # materialize the sink contents to executor-written parquet so
+        # the temp view can be dropped — the replay result never
+        # round-trips the driver (streaming_attribution_replay output
+        # grows with user count, so a collect() here would be a
+        # 100×-scale bottleneck even though the windowed replays are
+        # aggregate-sized)
+        spark.table(name).select(*out_cols).write.parquet(sink_dir)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # materialize the sink contents to executor-written parquet so the
-    # temp view can be dropped — the replay result never round-trips
-    # the driver (streaming_attribution_replay output grows with user
-    # count, so a collect() here would be a 100×-scale bottleneck even
-    # though the windowed replays are aggregate-sized)
-    sink_dir = os.path.join(tempfile.gettempdir(), f"ges-sink-{run_id}")
-    spark.table(name).select(*out_cols).write.parquet(sink_dir)
-    _SINK_DIRS.append(sink_dir)
-    spark.catalog.dropTempView(name)
+        spark.catalog.dropTempView(name)
     return spark.read.parquet(sink_dir).select(*out_cols)
 
 
@@ -399,23 +352,20 @@ def streaming_foreachbatch_upsert_replay(spark: SparkSession, sf_dir: str) -> Da
     from ..streaming.events_stream import stream_upsert_to_parquet
 
     events = load_table(spark, sf_dir, "events")
-    run_id = uuid.uuid4().hex[:8]
     # stateless sink: no state store at all, so partitions are pure
     # merge/write parallelism — volume-sized (r11: 1.67 -> 1.20 s at
     # 32 cores on the 10x corpus)
     n_parts = _replay_partitions(spark, sf_dir, sized=True)
-    src_dir = _replay_source(spark, sf_dir, events, n_parts)
-    stream = spark.readStream.schema(events.schema).parquet(src_dir)
-    target = os.path.join(tempfile.gettempdir(), f"ges-upsert-{run_id}")
-    ckpt = os.path.join(tempfile.gettempdir(), f"ges-upsert-cp-{run_id}")
+    stream = spark.readStream.schema(events.schema).parquet(
+        _replay_source(spark, sf_dir)
+    )
+    target, ckpt = scratch_dir("upsert"), scratch_dir("upsert-cp")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
     try:
-        q = stream_upsert_to_parquet(spark, stream, target, ckpt)
-        q.awaitTermination(300)
+        _await_replay(stream_upsert_to_parquet(spark, stream, target, ckpt))
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    _SINK_DIRS.extend([target, ckpt])
     return spark.read.parquet(target).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )

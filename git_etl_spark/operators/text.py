@@ -1171,11 +1171,6 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BPE_MERGES = 8  # learned merge rules
 
-# learned merge table per (session, sf_dir, data fingerprint): a
-# tokenizer is trained once and applied many times — the artifact is
-# K scalar rows, so the memo holds data, not a DataFrame handle
-_BPE_MERGES_MEMO: dict[tuple[str, str, str], list[tuple[int, str, int]]] = {}
-
 
 def _bpe_oracle_sql() -> str:
     """DuckDB twin of text_bpe_merges: the K merge iterations unrolled
@@ -1260,19 +1255,8 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep lineage flat. At 100 TB you'd sample the vocab build, not the
     merge loop — this is the architecture HuggingFace tokenizers uses,
     expressed relationally."""
-    from ..io import dataset_fingerprint
-    from ..session import iter_checkpoint, memo_disabled
+    from ..session import iter_checkpoint
 
-    memo_key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        dataset_fingerprint(sf_dir, "documents"),
-    )
-    memoized = None if memo_disabled() else _BPE_MERGES_MEMO.get(memo_key)
-    if memoized is not None:
-        return spark.createDataFrame(
-            memoized, "rank long, pair string, pair_cnt long"
-        )
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1345,8 +1329,6 @@ def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab = iter_checkpoint(
             vocab.select("cnt", col.alias("spelled")), eager=False
         )
-    if not memo_disabled():
-        _BPE_MERGES_MEMO[memo_key] = merges
     return spark.createDataFrame(
         merges, "rank long, pair string, pair_cnt long"
     )

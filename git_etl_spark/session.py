@@ -20,10 +20,20 @@ unchanged to a large cluster:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable
 from contextlib import contextmanager as _contextmanager
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+from .io import dataset_fingerprint
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -91,20 +101,67 @@ def get_spark(
 
 def memo_disabled() -> bool:
     """True when ``SPARK_GRAFT_DISABLE_MEMO`` is set to a non-empty
-    value other than ``0`` — a measurement knob that bypasses every
-    intra-session result memo (pagerank fixpoint, dedup pair graphs,
-    BPE merge table, streaming replay source) so each query call is a
-    full per-solve run.
-
-    The memos model real production sharing (one converged artifact,
-    several consuming surfaces) and stay ON for bench and the driver —
-    but a SCALE measurement of a memoized query in a session that
-    already ran it measures the cache hit, not the solve (the r11
-    cores-screen blind spot: pagerank/BPE/cluster readings were memo
-    hits — PERFORMANCE.md round 11). Sites gate only the memo GET and
-    PUT on this flag; keys, invalidation, and default behavior are
-    unchanged."""
+    value other than ``0`` — a measurement knob that makes
+    :func:`session_artifact` build every time and store nothing, so a
+    scale measurement of a query in a session that already ran it
+    times the solve, not the stored artifact (PERFORMANCE.md round
+    11)."""
     return os.environ.get("SPARK_GRAFT_DISABLE_MEMO", "0") not in ("", "0")
+
+
+# (applicationId, kind, sf_dir, dataset fingerprint) -> artifact
+_ARTIFACTS: dict[tuple[str, str, str, str], object] = {}
+
+
+def session_artifact(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    build: Callable[[], T],
+) -> T:
+    """The ``kind`` artifact built from ``tables`` under ``sf_dir``,
+    built once per session and shared by every query that consumes it
+    (a trained index, a converged fixpoint, a verified pair graph).
+
+    The key holds the tables' content fingerprint, so rewriting the
+    data under a reused path builds afresh instead of serving a stale
+    artifact. Only artifacts that two or more registry queries consume
+    come through here; a repeat of one query rebuilds its own state."""
+    if memo_disabled():
+        return build()
+    key = (
+        spark.sparkContext.applicationId,
+        kind,
+        sf_dir,
+        dataset_fingerprint(sf_dir, *tables),
+    )
+    if key not in _ARTIFACTS:
+        _ARTIFACTS[key] = build()
+    return _ARTIFACTS[key]  # type: ignore[return-value]
+
+
+_SCRATCH_DIRS: list[str] = []
+
+
+def scratch_dir(prefix: str) -> str:
+    """A fresh ``ges-<prefix>-<id>`` path under the temp dir, to be
+    written by the caller. It is registered before anything is written
+    there, so a failed write leaves nothing behind at exit either."""
+    path = os.path.join(
+        tempfile.gettempdir(), f"ges-{prefix}-{uuid.uuid4().hex[:8]}"
+    )
+    _SCRATCH_DIRS.append(path)
+    return path
+
+
+def _remove_scratch_dirs() -> None:
+    for path in _SCRATCH_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH_DIRS.clear()
+
+
+atexit.register(_remove_scratch_dirs)
 
 
 def iter_checkpoint(df, eager: bool = True):

@@ -12,6 +12,14 @@ SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECTNESS = "/root/testdata/sf0.01"
 
 
+def forget_artifacts(*kinds: str) -> None:
+    """Drop the stored session artifacts of these kinds."""
+    from git_etl_spark import session
+
+    for key in [k for k in session._ARTIFACTS if k[1] in kinds]:
+        del session._ARTIFACTS[key]
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile

@@ -208,16 +208,21 @@ def test_prefix_scheme_equals_deletion_scheme_on_shipped_corpus(
 def test_corpus_deletion_distance_memoized(spark, monkeypatch):
     """VERDICT r13 task 6: the corpus-d full-scan max is paid once per
     (applicationId, sf_dir, documents fingerprint) and served from the
-    memo for every later pair-pipeline consumer in the session; the
+    session artifact store for every later pair-pipeline consumer; the
     SPARK_GRAFT_DISABLE_MEMO knob bypasses both get and put so scale
     measurements time the solve."""
-    from .conftest import SF_SMOKE
+    from git_etl_spark import session
+
+    from .conftest import SF_SMOKE, forget_artifacts
+
+    def stored() -> int:
+        return sum(k[1] == "corpus-d" for k in session._ARTIFACTS)
 
     monkeypatch.delenv("SPARK_GRAFT_DISABLE_MEMO", raising=False)
-    dedup._CORPUS_D_MEMO.clear()
+    forget_artifacts("corpus-d")
     sets = dedup._token_sets(spark, SF_SMOKE)
     d1 = dedup._corpus_deletion_distance(spark, SF_SMOKE, sets)
-    assert len(dedup._CORPUS_D_MEMO) == 1
+    assert stored() == 1
 
     # second call must not touch the DataFrame at all (scan-free)
     class _Boom:
@@ -232,5 +237,5 @@ def test_corpus_deletion_distance_memoized(spark, monkeypatch):
     d3 = dedup._corpus_deletion_distance(spark, SF_SMOKE, sets)
     assert d3 == d1
     # knob ON: no put happened (still exactly the one earlier entry)
-    assert len(dedup._CORPUS_D_MEMO) == 1
-    dedup._CORPUS_D_MEMO.clear()
+    assert stored() == 1
+    forget_artifacts("corpus-d")

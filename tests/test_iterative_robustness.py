@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from .conftest import SF_CORRECTNESS
+from .conftest import SF_CORRECTNESS, forget_artifacts
 
 
 def _path_graph(spark, n):
@@ -68,8 +68,7 @@ def test_reliable_checkpoint_equals_local(spark, tmp_path):
     baseline = sorted(
         map(tuple, dedup.dedup_cluster_components(spark, SF_CORRECTNESS).collect())
     )
-    dedup._CLUSTER_MEMO.clear()
-    dedup._REP_GRAPH_MEMO.clear()
+    forget_artifacts("cluster-labels", "rep-graph")
     ckpt = str(tmp_path / "ckpt")
     spark.sparkContext.setCheckpointDir(ckpt)
     try:
@@ -82,10 +81,9 @@ def test_reliable_checkpoint_equals_local(spark, tmp_path):
         )
     finally:
         # reset to the local fast path and drop results produced under
-        # the reliable engine so later tests rebuild their own memos
+        # the reliable engine so later tests rebuild their own artifacts
         spark.sparkContext._jsc.sc().setCheckpointDir(None)
-        dedup._CLUSTER_MEMO.clear()
-        dedup._REP_GRAPH_MEMO.clear()
+        forget_artifacts("cluster-labels", "rep-graph")
     assert spark.sparkContext.getCheckpointDir() is None
     assert reliable == baseline
 

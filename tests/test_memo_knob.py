@@ -1,10 +1,17 @@
-"""The memo-bypass measurement knob (VERDICT r11 task 4): with
-SPARK_GRAFT_DISABLE_MEMO set, every intra-session memo site must
-bypass both GET and PUT so a scale measurement times the solve, not a
-cache hit; with it unset (the default, used by bench and the driver),
-memoization is unchanged."""
+"""The one artifact-reuse path: ``session.session_artifact`` stores
+what two or more queries consume, keyed by session, kind, sf_dir and
+the tables' content fingerprint; with SPARK_GRAFT_DISABLE_MEMO set it
+builds every time and stores nothing, so a scale measurement times the
+solve, not a stored artifact."""
 
-from git_etl_spark.session import memo_disabled
+import os
+import re
+from pathlib import Path
+
+from git_etl_spark import session
+from git_etl_spark.session import memo_disabled, session_artifact
+
+from .conftest import SF_SMOKE
 
 
 def test_flag_semantics(monkeypatch):
@@ -18,53 +25,72 @@ def test_flag_semantics(monkeypatch):
     assert memo_disabled()
 
 
-def test_every_memo_site_is_gated():
-    """Each module-level memo dict must gate its get/put on
-    memo_disabled — a new memo added without the gate would silently
-    reopen the r11 blind spot (its scale readings would be cache
-    hits). Source-level check: in every operators module that declares
-    a *_MEMO dict, the number of memo_disabled mentions must be at
-    least the number of distinct memo dicts times two (one get gate +
-    one put gate)."""
-    import re
-    from pathlib import Path
-
-    ops = Path(__file__).resolve().parent.parent / "git_etl_spark"
-    for path in ops.rglob("*.py"):
+def test_one_artifact_path():
+    """No module keeps its own ``_*_MEMO`` dict, and the bypass knob and
+    the exit cleanup live in session.py alone."""
+    pkg = Path(__file__).resolve().parent.parent / "git_etl_spark"
+    for path in pkg.rglob("*.py"):
         src = path.read_text()
-        memos = set(re.findall(r"^(_[A-Z0-9_]+_MEMO)\s*[:=]", src, re.M))
-        if not memos:
-            continue
-        gates = src.count("memo_disabled()")
-        assert gates >= 2 * len(memos), (
-            f"{path.name}: {len(memos)} memo dicts ({sorted(memos)}) but "
-            f"only {gates} memo_disabled() gates — each memo needs a "
-            "gated get and a gated put"
-        )
+        assert not re.search(r"^_[A-Z0-9_]+_MEMO\b", src, re.M), path
+        if path != pkg / "session.py":
+            assert "memo_disabled" not in src and "atexit" not in src, path
+
+
+def _builds(spark, kind, sf_dir, calls):
+    return session_artifact(
+        spark, kind, sf_dir, ("documents",), lambda: calls.append(kind) or len(calls)
+    )
+
+
+def test_artifact_built_once_per_content(spark, tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DISABLE_MEMO", raising=False)
+    table = tmp_path / "documents.parquet"
+    table.write_bytes(b"v1")
+    calls: list[str] = []
+    assert _builds(spark, "a", str(tmp_path), calls) == 1
+    assert _builds(spark, "a", str(tmp_path), calls) == 1
+    assert calls == ["a"]
+    # a rewrite under the same path builds afresh
+    table.write_bytes(b"v2, longer")
+    assert _builds(spark, "a", str(tmp_path), calls) == 2
+    assert calls == ["a", "a"]
+
+
+def test_artifact_kinds_do_not_collide(spark, tmp_path, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DISABLE_MEMO", raising=False)
+    (tmp_path / "documents.parquet").write_bytes(b"v1")
+    calls: list[str] = []
+    assert _builds(spark, "a", str(tmp_path), calls) == 1
+    assert _builds(spark, "b", str(tmp_path), calls) == 2
+    assert _builds(spark, "a", str(tmp_path), calls) == 1
+    assert calls == ["a", "b"]
+
+
+def test_artifact_bypass_stores_nothing(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_MEMO", "1")
+    (tmp_path / "documents.parquet").write_bytes(b"v1")
+    before = dict(session._ARTIFACTS)
+    calls: list[str] = []
+    assert _builds(spark, "a", str(tmp_path), calls) == 1
+    assert _builds(spark, "a", str(tmp_path), calls) == 2
+    assert session._ARTIFACTS == before
 
 
 def test_bypass_written_dirs_still_cleaned(spark, monkeypatch):
-    """With the knob ON, written source/format dirs skip the memo PUT
-    but must land on the unconditional cleanup list — otherwise every
-    per-solve measurement run leaks a full-table copy in /tmp
-    (ADVICE-class leak caught by the r12 self-review)."""
-    monkeypatch.setenv("SPARK_GRAFT_DISABLE_MEMO", "1")
-    sf_dir = "/root/testdata/sf0.001"
-
+    """With the knob ON nothing is stored, but every dir written lands
+    on the scratch list and the exit hook removes it — a per-solve
+    measurement loop must not accumulate full-table copies in /tmp."""
     from git_etl_spark.operators import file_formats as ff
     from git_etl_spark.operators import streaming_bridge as sb
-    from git_etl_spark.io import load_table
 
-    before_fmt = len(ff._FMT_EXTRA_DIRS)
-    path = ff._written_copy(spark, sf_dir, "json")
-    assert path in ff._FMT_EXTRA_DIRS and path not in ff._FMT_MEMO.values()
-    assert len(ff._FMT_EXTRA_DIRS) == before_fmt + 1
-
-    before_sink = len(sb._SINK_DIRS)
-    events = load_table(spark, sf_dir, "events")
-    src = sb._replay_source(spark, sf_dir, events, n_parts=2)
-    assert src in sb._SINK_DIRS and src not in sb._SRC_MEMO.values()
-    assert len(sb._SINK_DIRS) == before_sink + 1
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_MEMO", "1")
+    monkeypatch.setattr(session, "_SCRATCH_DIRS", [])
+    fmt = ff._written_copy(spark, SF_SMOKE, "json")
+    src = sb._replay_source(spark, SF_SMOKE)
+    assert session._SCRATCH_DIRS == [fmt, src]
+    assert os.path.isdir(fmt) and os.path.isdir(src)
+    session._remove_scratch_dirs()
+    assert not os.path.exists(fmt) and not os.path.exists(src)
 
 
 def test_global_ntile_non_identifier_out_name(spark):

@@ -3,7 +3,7 @@ rows-only-checks these, so the real assertions live here)."""
 
 from __future__ import annotations
 
-from .conftest import SF_CORRECTNESS
+from .conftest import SF_CORRECTNESS, forget_artifacts
 
 
 def _q(name):
@@ -389,13 +389,13 @@ def test_cluster_components_ls_ss_engine_equivalent(spark, monkeypatch):
         map(tuple, dedup.dedup_cluster_components(spark, SF_CORRECTNESS).collect())
     )
     monkeypatch.setattr(dedup, "LS_SS_EDGE_THRESHOLD", 0)
-    # the converged-labels memo would short-circuit the forced branch
-    dedup._CLUSTER_MEMO.clear()
+    # the stored labels would short-circuit the forced branch
+    forget_artifacts("cluster-labels")
     forced = sorted(
         map(tuple, dedup.dedup_cluster_components(spark, SF_CORRECTNESS).collect())
     )
     assert baseline == forced
-    dedup._CLUSTER_MEMO.clear()  # don't leak the forced-engine result
+    forget_artifacts("cluster-labels")  # don't leak the forced-engine result
 
 
 def test_large_star_small_star_random_graphs(spark):

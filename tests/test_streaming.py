@@ -268,6 +268,26 @@ def test_foreachbatch_upsert_idempotent_replay(spark, events_dir, tmp_path):
     assert once == batch
 
 
+def test_replay_timeout_stops_and_raises(spark, monkeypatch):
+    """A replay still running at the awaitTermination timeout is
+    stopped and raised — never read half-done from the sink or target,
+    and never left running."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from git_etl_spark.operators import streaming_bridge as sb
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    for replay in (
+        sb.streaming_hourly_agg_replay,
+        sb.streaming_foreachbatch_upsert_replay,
+    ):
+        with pytest.raises(TimeoutError):
+            replay(spark, SF_SMOKE)
+        assert spark.streams.active == []
+
+
 def test_transform_with_state_env_gap():
     """Spark 4's transformWithStateInPandas (the successor stateful API
     to applyInPandasWithState) requires google.protobuf for its state
