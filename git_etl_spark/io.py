@@ -1,9 +1,11 @@
 """Parquet readers for the synthetic corpus.
 
-Reads are plain ``spark.read.parquet`` so Catalyst keeps full control:
-column pruning and predicate pushdown reach the scan (verify with
-``df.explain`` → ``PushedFilters`` / ``ReadSchema``). No caching here —
-callers cache only when a frame is reused within one job.
+Reads are ``spark.read.schema(...).parquet`` with the schema Parquet
+inference returned on the table's first load in this session, so
+Catalyst keeps full control: column pruning and predicate pushdown
+reach the scan (verify with ``df.explain`` → ``PushedFilters`` /
+``ReadSchema``). No data is cached here — callers cache only when a
+frame is reused within one job.
 
 At 100 TB the same call pattern holds; the difference is layout:
 fact tables are written date-partitioned (``partitionBy``) so partition
@@ -17,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .schemas import CORPUS_TABLES
 
@@ -33,6 +36,13 @@ def table_path(sf_dir: str, name: str) -> str:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one corpus table from ``{sf_dir}/{name}.parquet``.
+
+    The table's schema is inferred once per table version per session
+    (``session.session_artifact``, keyed on the files' fingerprint) and
+    every later load reads with it: inference is a Spark job, the read
+    with a given schema runs none. Only inference is correct for every
+    corpus — ``events.ts`` is nanoseconds in some and microseconds in
+    others — so no static schema stands in for it.
 
     ``events.ts`` is TIMESTAMP(NANOS) in the parquet; Spark reads it as
     long (``nanosAsLong``) and we truncate to microseconds with integer
@@ -59,8 +69,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # defensive: the caller's session may not be ours (the driver
         # passes its own) — this conf is runtime-settable
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    # function-level: session imports dataset_fingerprint from here
+    from .session import session_artifact
+
+    path = table_path(sf_dir, name)
+    schema = session_artifact(
+        spark,
+        f"schema:{name}",
+        sf_dir,
+        (name,),
+        lambda: spark.read.parquet(path).schema,
+    )
+    df = spark.read.schema(schema).parquet(path)
+    if name == "events" and "ts" in schema.names and isinstance(
+        schema["ts"].dataType, LongType
+    ):
         # ns → µs → TIMESTAMP_NTZ via pure NTZ arithmetic: no session-
         # timezone dependence (timestamp_micros() would yield a TZ-aware
         # timestamp that collects shifted under a non-UTC session)

@@ -79,7 +79,10 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # local mode puts executors in the driver JVM: shuffle blocks +
         # localCheckpoint storage for the iterative operators live here
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10m")
         # Every distinct query compiles fresh whole-stage-codegen
@@ -97,6 +100,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` when ``$SPARK_GRAFT_DRIVER_MEM`` is unset:
+    three quarters of the host's physical memory, capped at 16g.
+
+    In local mode the executors live in the driver JVM, so this heap is
+    the engine's whole memory; the other quarter is left to the Python
+    driver, its pandas/Arrow workers and the OS. A fixed 16g would ask
+    a 15 GiB host without swap for more than it has."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(16 * 1024, physical_bytes * 3 // 4 // 2**20)}m"
 
 
 def memo_disabled() -> bool:
@@ -122,7 +138,9 @@ def session_artifact(
 ) -> T:
     """The ``kind`` artifact built from ``tables`` under ``sf_dir``,
     built once per session and shared by every query that consumes it
-    (a trained index, a converged fixpoint, a verified pair graph).
+    (a trained index, a converged fixpoint, a verified pair graph, and
+    each corpus table's inferred schema, which ``io.load_table`` reads
+    with on every load after the first).
 
     The key holds the tables' content fingerprint, so rewriting the
     data under a reused path builds afresh instead of serving a stale

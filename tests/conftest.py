@@ -22,10 +22,14 @@ def forget_artifacts(*kinds: str) -> None:
 
 @pytest.fixture(scope="session")
 def spark():
-    import tempfile
+    import os
 
-    from git_etl_spark.session import get_spark
+    from git_etl_spark.session import get_spark, scratch_dir
 
+    # on the scratch list, so the exit hook removes it and the bucketed
+    # tables written there
+    warehouse = scratch_dir("wh")
+    os.makedirs(warehouse)
     # cores from $SPARK_GRAFT_CPUS (get_spark's default), so the session
     # fits the host; the shuffle width stays fixed across hosts
     spark = get_spark(
@@ -33,7 +37,7 @@ def spark():
         shuffle_partitions=8,
         # static config — must be set at session build (bucketing tests
         # saveAsTable into it)
-        extra_conf={"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="ges-wh-")},
+        extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield spark
     spark.stop()

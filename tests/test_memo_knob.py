@@ -2,11 +2,16 @@
 what two or more queries consume, keyed by session, kind, sf_dir and
 the tables' content fingerprint; with SPARK_GRAFT_DISABLE_MEMO set it
 builds every time and stores nothing, so a scale measurement times the
-solve, not a stored artifact."""
+solve, not a stored artifact. Corpus table schemas come through it too:
+``io.load_table`` infers each table version's schema once."""
 
 import os
 import re
+import uuid
 from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from git_etl_spark import session
 from git_etl_spark.session import memo_disabled, session_artifact
@@ -108,3 +113,49 @@ def test_global_ntile_non_identifier_out_name(spark):
         (i, 3) for i in range(7, 10)
     }
     assert rows == want
+
+
+def _load(spark, sf_dir, name):
+    """One ``load_table`` call under its own job group: the Spark jobs
+    it ran, and the frame."""
+    from git_etl_spark.io import load_table
+
+    sc = spark.sparkContext
+    group = f"load-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        df = load_table(spark, sf_dir, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), df
+
+
+def _write_region(sf_dir, **extra):
+    cols = {"r_regionkey": pa.array([0, 1], pa.int32()), "r_name": ["A", "B"]}
+    pq.write_table(pa.table({**cols, **extra}), f"{sf_dir}/region.parquet")
+
+
+def test_schema_inferred_once_per_table_version(spark, tmp_path, monkeypatch):
+    """The first load of a table infers its schema (one Spark job);
+    later loads of the unchanged table read with the stored schema and
+    run none. A rewrite under the same path is inferred afresh."""
+    monkeypatch.delenv("SPARK_GRAFT_DISABLE_MEMO", raising=False)
+    _write_region(tmp_path)
+    jobs, first = _load(spark, str(tmp_path), "region")
+    assert jobs == 1
+    jobs, again = _load(spark, str(tmp_path), "region")
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == [(0, "A"), (1, "B")]
+
+    _write_region(tmp_path, r_comment=["x", "y"])
+    jobs, rewritten = _load(spark, str(tmp_path), "region")
+    assert jobs == 1
+    assert rewritten.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert sorted(rewritten.collect()) == [(0, "A", "x"), (1, "B", "y")]
+
+
+def test_schema_bypass_infers_every_load(spark, tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_MEMO", "1")
+    _write_region(tmp_path)
+    assert [_load(spark, str(tmp_path), "region")[0] for _ in range(3)] == [1, 1, 1]

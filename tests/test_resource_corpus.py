@@ -98,3 +98,16 @@ def test_resource_constrained_oracle_parity():
         f"constrained-session parity failed (rc={proc.returncode}):\n"
         f"{out}\n--- stderr tail ---\n{proc.stderr[-2000:]}"
     )
+
+
+def test_default_driver_memory_fits_host():
+    """Without $SPARK_GRAFT_DRIVER_MEM the driver heap is three quarters
+    of physical memory, never more than the old fixed 16g, so a host
+    without swap is not asked for more than it has. Starts no session."""
+    from git_etl_spark.session import default_driver_memory
+
+    assert default_driver_memory(15 * 2**30) == "11520m"
+    assert default_driver_memory(4 * 2**30) == "3072m"
+    assert default_driver_memory(128 * 2**30) == "16384m"
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert int(default_driver_memory().removesuffix("m")) * 2**20 < host

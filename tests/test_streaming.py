@@ -29,16 +29,25 @@ def _stream(spark, events_dir):
     return spark.readStream.schema(schema).parquet(events_dir)
 
 
+def _await(q, timeout=120):
+    """Wait for an availableNow query to drain. One still running at
+    the timeout fails the test and is stopped: never compared half-done,
+    never left running into later tests."""
+    try:
+        if not q.awaitTermination(timeout):
+            pytest.fail(f"stream {q.name or q.id} ran past {timeout} s")
+    finally:
+        q.stop()
+
+
 def _run_to_memory(sdf, name, mode="append"):
-    q = (
+    _await(
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(mode)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
-    return q
 
 
 def test_streaming_hourly_matches_batch(spark, events_dir):
@@ -124,7 +133,7 @@ def test_streaming_late_rows_dropped(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        _await(q)
 
     # run 1: events at 10:00 and 12:00 → watermark 11:50, bucket 10 closes
     write_batch("b1", [
@@ -162,7 +171,7 @@ def test_stateful_running_totals_match_batch(spark, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    _await(q)
 
     # last update per user wins (state is cumulative across batches)
     final: dict = {}
@@ -254,7 +263,7 @@ def test_foreachbatch_upsert_idempotent_replay(spark, events_dir, tmp_path):
         q = stream_upsert_to_parquet(
             spark, _stream(spark, events_dir), target, str(tmp_path / cp)
         )
-        q.awaitTermination(120)
+        _await(q)
 
     run("cp1")
     once = sorted(map(tuple, spark.read.parquet(target).collect()))
