@@ -32,6 +32,7 @@ from ..sources.git_log import (
     has_unborn_head,
     list_tracked_files,
     repo_commits_df,
+    repo_name_of,
 )
 from ..sources.git_tags import repo_tags_df
 from ..sources.language import detect_language
@@ -148,9 +149,14 @@ def etl_repos(
     some repos keeps the other repos' commits in each author's stats.
     Only when all five tables are staged does one ``publish_all`` swap
     them in; a failed staging write removes the staging directories
-    already written and leaves every table as it was."""
+    already written and leaves every table as it was.
+
+    O2: a repository whose probe, ``ls-files``, tag scan or commit scan
+    fails is reported under ``failed`` with its error and contributes
+    no row to any table; the other repositories still load."""
     report = {"processed": [], "skipped": [], "failed": []}
     selected: list[str] = []
+    languages: dict[str, str | None] = {}
     for path in repo_paths:
         try:
             if has_unborn_head(path) or (
@@ -158,6 +164,7 @@ def etl_repos(
             ):
                 report["skipped"].append(path)  # F3 no commits yet, F2 gate
                 continue
+            languages[repo_name_of(path)] = detect_language(list_tracked_files(path))
             selected.append(path)
         except Exception as exc:  # noqa: BLE001 — O2 per-repo fail isolation
             report["failed"].append({"repo": path, "error": str(exc)})
@@ -165,15 +172,20 @@ def etl_repos(
     if not selected:
         return report
 
-    commits = repo_commits_df(spark, selected)
+    # the cheap tag scan goes first, so a repository whose tags fail
+    # never gets the commit scan; one whose commit scan fails has its
+    # tags filtered back out
+    failed: dict[str, str] = {}
+    tags = repo_tags_df(spark, selected, failed=failed)
+    selected = [p for p in selected if p not in failed]
+    commits = repo_commits_df(spark, selected, failed=failed)
+    loaded = [p for p in selected if p not in failed]
+    if failed:
+        report["failed"] += [{"repo": p, "error": e} for p, e in failed.items()]
+        tags = tags.filter(F.col("repo_name").isin([repo_name_of(p) for p in loaded]))
     if commits.isEmpty():  # F3 zero-commit guard
-        report["skipped"].extend(selected)
+        report["skipped"].extend(loaded)
         return report
-
-    languages = {
-        os.path.basename(p.rstrip("/")): detect_language(list_tracked_files(p))
-        for p in selected
-    }
 
     # every frame is unique on its natural key: commits and tags at the
     # source, file_changes by its own K3 dedup, repos by groupBy
@@ -181,7 +193,7 @@ def etl_repos(
         "commits": commits.drop("file_changes"),
         "file_changes": explode_file_changes(commits),
         "repos": repo_metadata(commits, languages),
-        "tags": repo_tags_df(spark, selected),
+        "tags": tags,
     }
     keys = {
         "commits": ["repo_name", "sha"],
@@ -219,6 +231,6 @@ def etl_repos(
         raise
     publish_all(staged)
 
-    report["processed"] = selected
+    report["processed"] = loaded
     report["summary"] = summary_stats(commits).collect()[0].asDict(recursive=True)
     return report

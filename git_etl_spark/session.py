@@ -16,6 +16,11 @@ unchanged to a large cluster:
   joins at runtime; dimension tables (region/nation/customer at test
   scale) broadcast automatically, and code hints ``F.broadcast`` where
   a side is known-small by construction.
+- Driver JIT policy: a 512m code cache, and C2 (tier-4) promotion
+  thresholds at 10x the JDK defaults so that code the JVM runs only
+  briefly — Catalyst, the planner, Janino, one-off generated classes —
+  stays at C1. Both apply to the driver JVM only, which in local mode
+  is the whole engine.
 """
 
 from __future__ import annotations
@@ -85,16 +90,30 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "10m")
-        # Every distinct query compiles fresh whole-stage-codegen
-        # classes; a multi-hundred-query session fills the JVM's
-        # default ~240 MB reserved code cache (116 MB profiled-nmethod
-        # heap), and the JIT's code-cache sweeping then flushes warm
-        # methods — measured: tpch_q18 best-of-2 degraded 1.47 s →
-        # 1.87 s after 100 prior queries under the default, and
-        # recovered exactly with this raise (PERFORMANCE.md round 7).
+        # Driver JIT policy (in local mode this JVM is the engine;
+        # executors on a cluster keep the JVM defaults).
+        # - Code cache 512m: every distinct query compiles fresh
+        #   whole-stage-codegen classes; a multi-hundred-query session
+        #   fills the default ~240 MB cache (116 MB profiled-nmethod
+        #   heap) and sweeping then flushes warm methods — tpch_q18
+        #   best-of-2 degraded 1.47 s → 1.87 s after 100 prior queries
+        #   under the default and recovered exactly with the raise
+        #   (PERFORMANCE.md round 7).
+        # - Tier-4 (C2) thresholds at 10x the JDK 17 defaults: a short
+        #   ETL run spent about half its CPU in C2 (cold etl_repos on a
+        #   4-core host: 17.8 of 33.3 s), compiling lukewarm code —
+        #   Catalyst rules, the planner, Janino, one-off codegen
+        #   classes — that stops running before C2 code pays back.
+        #   That code now stays at C1; hot per-row loops still reach
+        #   C2. C1 only (-XX:TieredStopAtLevel=1) saves more on short
+        #   runs but slowed sf0.1 dedup_minhash_lsh 3.6 s → 9.9 s.
         .config(
             "spark.driver.extraJavaOptions",
-            "-XX:ReservedCodeCacheSize=512m",
+            "-XX:ReservedCodeCacheSize=512m"
+            " -XX:Tier4InvocationThreshold=50000"
+            " -XX:Tier4MinInvocationThreshold=6000"
+            " -XX:Tier4CompileThreshold=150000"
+            " -XX:Tier4BackEdgeThreshold=400000",
         )
     )
     for k, v in (extra_conf or {}).items():

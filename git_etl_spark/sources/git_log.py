@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import re
 import subprocess
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
@@ -198,6 +199,20 @@ def list_tracked_files(repo_path: str) -> list[str]:
     return [ln for ln in _run_git(repo_path, "ls-files").splitlines() if ln]
 
 
+def scan_isolated(scan: Callable[..., list], path: str, failed: dict[str, str] | None, *args) -> list:
+    """``scan(path, *args)``. With ``failed`` given, an error leaves the
+    repository out of the batch: it is recorded as ``failed[path]`` and
+    yields no rows (O2 per-repo fail isolation). Without it the error
+    propagates."""
+    try:
+        return scan(path, *args)
+    except Exception as exc:  # noqa: BLE001 — O2 per-repo fail isolation
+        if failed is None:
+            raise
+        failed[path] = str(exc)
+        return []
+
+
 def batch_table(
     rows: list[dict], schema: StructType, natural_key: tuple[str, ...]
 ) -> pa.Table:
@@ -216,15 +231,23 @@ def repo_commits_df(
     repo_paths: list[str],
     branch: str | None = None,
     max_workers: int = 8,
+    failed: dict[str, str] | None = None,
 ) -> DataFrame:
     """S1 as a DataFrame source: parallel subprocess scans →
     one typed DataFrame (COMMITS_SCHEMA), unique on (repo_name, sha):
     a duplicate commit (the same repository listed twice, or two
     repositories with one directory name) keeps the batch's last row
     (``batch_table``). Empty repo list or all-empty repos still yield
-    an empty frame with the right schema (F3 guard)."""
+    an empty frame with the right schema (F3 guard). A repository whose
+    scan fails is recorded in ``failed`` when it is given
+    (``scan_isolated``)."""
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        batches = list(pool.map(lambda p: scan_repo_commits(p, branch), repo_paths))
+        batches = list(
+            pool.map(
+                lambda p: scan_isolated(scan_repo_commits, p, failed, branch),
+                repo_paths,
+            )
+        )
     rows = [c for batch in batches for c in batch]
     table = batch_table(rows, COMMITS_SCHEMA, ("repo_name", "sha"))
     return spark.createDataFrame(table, COMMITS_SCHEMA)

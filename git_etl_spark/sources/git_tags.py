@@ -19,7 +19,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TAGS_SCHEMA
-from .git_log import batch_table, repo_name_of
+from .git_log import batch_table, repo_name_of, scan_isolated
 
 FIELD_SEP = "\x00"
 RECORD_SEP = "\x00\x00REC\x00\x00"
@@ -126,10 +126,15 @@ def scan_repo_tags(repo_path: str) -> list[dict]:
     return parse_tag_records(out.stdout, repo_name_of(repo_path))
 
 
-def repo_tags_df(spark: SparkSession, repo_paths: list[str]) -> DataFrame:
+def repo_tags_df(
+    spark: SparkSession,
+    repo_paths: list[str],
+    failed: dict[str, str] | None = None,
+) -> DataFrame:
     """S2 as a DataFrame source (TAGS_SCHEMA), unique on
     (repo_name, tag_name); a duplicate keeps the batch's last row
-    (``batch_table``)."""
-    rows = [t for p in repo_paths for t in scan_repo_tags(p)]
+    (``batch_table``). A repository whose scan fails is recorded in
+    ``failed`` when it is given (``scan_isolated``)."""
+    rows = [t for p in repo_paths for t in scan_isolated(scan_repo_tags, p, failed)]
     table = batch_table(rows, TAGS_SCHEMA, ("repo_name", "tag_name"))
     return spark.createDataFrame(table, TAGS_SCHEMA)

@@ -11,7 +11,7 @@ import sys
 
 import pytest
 
-from tests.test_git_etl_e2e import _commit, _git
+from tests.test_git_etl_e2e import _commit, _git, corrupt_history_repo
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -96,6 +96,19 @@ def test_unborn_head_skips_exit_0(spark, tmp_path, capsys):
     for gate in ([], ["--author", "NoSuch"]):
         assert main([str(repo), "--output", str(out), *gate]) == 0
         assert "Skipping" in capsys.readouterr().out
+    assert not out.exists()
+
+
+def test_scan_failure_exit_1(spark, tmp_path, capsys):
+    """A repository whose ``HEAD`` resolves but whose ``git log`` fails
+    prints ``ETL failed`` and exits 1 (``main.ts:421-430``), with no
+    traceback and no warehouse written."""
+    from git_etl_spark.cli import main
+
+    repo = corrupt_history_repo(tmp_path)
+    out = tmp_path / "warehouse"
+    assert main([str(repo), "--output", str(out)]) == 1
+    assert "ETL failed:" in capsys.readouterr().err
     assert not out.exists()
 
 

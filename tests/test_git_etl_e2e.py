@@ -280,9 +280,38 @@ def test_config_run_skips_empty_repo(spark, tmp_path, capsys):
     assert row.repo_name == "proj-full"
 
 
-def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypatch):
-    """O2: a directory that is not a git repository fails on its own;
-    the other repositories in the config still load."""
+def _plain_directory(root):
+    plain = root / "not-a-repo"
+    plain.mkdir()
+    return plain
+
+
+def corrupt_history_repo(root):
+    """A repository whose ``HEAD`` resolves but whose ``git log
+    --numstat`` exits 128: the loose tree object of ``HEAD~1`` is
+    deleted, so the probe, ``ls-files`` and the tag scan pass and the
+    commit scan fails."""
+    repo = _one_author_repo(
+        root, "proj-corrupt", "Cal Dev", "cal@example.com",
+        ["2024-08-02T10:00:00+00:00", "2024-08-03T10:00:00+00:00"],
+    )
+    _git(repo, "tag", "v-corrupt")
+    tree = subprocess.run(
+        ["git", "-C", str(repo), "rev-parse", "HEAD~1^{tree}"],
+        check=True, capture_output=True, text=True,
+    ).stdout.strip()
+    (repo / ".git" / "objects" / tree[:2] / tree[2:]).unlink()
+    return repo
+
+
+@pytest.mark.parametrize(
+    "make_bad", [_plain_directory, corrupt_history_repo],
+    ids=["not-a-repo", "corrupt-history"],
+)
+def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypatch, make_bad):
+    """O2: a directory that is not a git repository, or a repository
+    whose commit scan fails, fails on its own; the other repositories
+    in the config still load."""
     import json
 
     from git_etl_spark.cli import main
@@ -293,10 +322,9 @@ def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypa
         tmp_path, "proj-good", "Gia Dev", "gia@example.com",
         ["2024-08-01T10:00:00+00:00"],
     )
-    plain = tmp_path / "not-a-repo"
-    plain.mkdir()
+    bad = make_bad(tmp_path)
     cfg = tmp_path / "repositories.json"
-    cfg.write_text(json.dumps({"repositories": [str(repo), str(plain)]}))
+    cfg.write_text(json.dumps({"repositories": [str(repo), str(bad)]}))
     out = tmp_path / "wh"
 
     assert main(["-c", str(cfg), "-o", str(out)]) == 0
@@ -305,6 +333,11 @@ def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypa
     assert "1 repositories failed" in stdout
     (row,) = spark.read.parquet(str(out / "commits")).collect()
     assert row.repo_name == "proj-good"
+    (row,) = spark.read.parquet(str(out / "repos")).collect()
+    assert row.name == "proj-good"
+    for table in ("file_changes", "tags"):
+        rows = spark.read.parquet(str(out / table)).collect()
+        assert {r.repo_name for r in rows} <= {"proj-good"}, table
 
 
 def test_stored_timestamps_ignore_driver_timezone(spark, synthetic_repo):

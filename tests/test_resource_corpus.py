@@ -111,3 +111,34 @@ def test_default_driver_memory_fits_host():
     assert default_driver_memory(128 * 2**30) == "16384m"
     host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert int(default_driver_memory().removesuffix("m")) * 2**20 < host
+
+
+def test_driver_jvm_carries_jit_policy(spark):
+    """The running driver JVM has the JIT policy ``get_spark`` sets: a
+    512m code cache and C2 (tier-4) promotion thresholds at 10x the
+    JDK 17 defaults. The values are read from the live JVM, so an
+    ``extraJavaOptions`` edit that drops a flag fails here."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    flags = {
+        name: bean.getVMOption(name).getValue()
+        for name in (
+            "ReservedCodeCacheSize",
+            "Tier4InvocationThreshold",
+            "Tier4MinInvocationThreshold",
+            "Tier4CompileThreshold",
+            "Tier4BackEdgeThreshold",
+            "TieredStopAtLevel",
+        )
+    }
+    assert flags == {
+        "ReservedCodeCacheSize": str(512 * 2**20),
+        "Tier4InvocationThreshold": "50000",
+        "Tier4MinInvocationThreshold": "6000",
+        "Tier4CompileThreshold": "150000",
+        "Tier4BackEdgeThreshold": "400000",
+        # both tiers stay on: C2 still compiles the hot loops
+        "TieredStopAtLevel": "4",
+    }
