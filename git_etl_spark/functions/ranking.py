@@ -1,63 +1,13 @@
-"""Distributed total-order ranking — the zipWithIndex-style primitive
-the global-window docstrings promise "at 100 TB".
+"""Exact weighted quantiles over low-cardinality groups without a
+grouped window.
 
-``ROW_NUMBER() OVER (ORDER BY ...)`` with no PARTITION BY funnels the
-whole relation through ONE task — semantically, not as an accident of
-partition coalescing, so no runtime (AQE, bigger cluster) can rescue
-it. For data-linear inputs (per-user aggregates, per-doc scores, the
-shingle dictionary) that is the one stage class that cannot survive a
-100x scale-up. The classic fix is two-phase numbering, the same scheme
-``RDD.zipWithIndex`` uses:
-
-1. ``repartitionByRange`` on the sort key (distributed range sort —
-   sampled boundaries, each partition holds a contiguous key range),
-2. sort + number WITHIN each partition in parallel
-   (``monotonically_increasing_id`` after ``sortWithinPartitions``:
-   consecutive within a partition, so ``mid - min(mid)`` is the local
-   index),
-3. collect ONE count per partition (<= numPartitions rows — bounded by
-   cluster config, never by data; the same driver-side step
-   ``zipWithIndex`` performs) and broadcast the cumulative offsets
-   back; global rank = offset[pid] + local index + 1.
-
-The result is bit-identical to the single-task window whenever the
-sort key is TOTAL (callers append a unique tie-break column, as every
-query in this repo already does for determinism): range boundaries may
-land anywhere without changing any rank. The partitioned relation is
-``localCheckpoint``-pinned so the count pass and the rank pass see the
-same (sampled, hence otherwise non-deterministic) partitioning.
-
-``global_ntile`` derives NTILE(k) from the rank with the SQL-standard
-bucket arithmetic (n = bs*k + rem; the first rem buckets get bs+1
-rows), so exact quantile scoring needs no global window either — and
-unlike the percentile-boundary-binning fallback some docstrings used
-to point at, it keeps the exact output contract at any scale.
-
-Cost and crossover (measured, scripts/bench_ranking_crossover.py,
-local[32], min-of-2 after warm-up, NTILE(10) + aggregate sink):
-
-    rows        window    distributed
-    50k         0.42 s    1.46 s   <- fixed jobs dominate
-    500k        0.68 s    1.19 s
-    5M          7.84 s    1.49 s   <- 5.3x: the single task is the wall
-    20M         29.8 s    13.2 s
-
-The primitive pays ~1 s of fixed work (eager checkpoint, offsets
-collect, broadcast join) and wins past ~1M input rows on 32 cores —
-below that the single-task sort is cheaper. That is why the three
-aggregate-sized production sites (events RFM quintiles ~20k users,
-surprisal deciles ~50k docs, PPJoin sid ~20k shingles) measured the
-swap and REJECTED it (numbers at each site, PERFORMANCE.md round 11):
-their docstrings point here for the mechanical swap the moment the
-aggregate cardinality crosses ~1M.
-
-``grouped_weighted_quantile_rows`` below handles the DUAL failure —
-``Window.partitionBy(group)`` over a LOW-cardinality group column,
-where parallelism is capped at the group count at any cluster size —
-with an integer-bucket boundary search that needs no exchange of the
-data at all (kept in production at agg_weighted_median_price:
-10x data 5.25 -> 1.52 s at 32 cores). Its synthetic crossover (same
-script, 3 groups, weighted median):
+``Window.partitionBy(group)`` over a LOW-cardinality group column caps
+parallelism at the group count at any cluster size.
+``grouped_weighted_quantile_rows`` replaces it with an integer-bucket
+boundary search that needs no exchange of the data at all (kept in
+production at agg_weighted_median_price: 10x data 5.25 -> 1.52 s at
+32 cores). Its synthetic crossover
+(scripts/bench_ranking_crossover.py, 3 groups, weighted median):
 
     rows      grouped window    bucket search
     50k       0.30 s            0.92 s
@@ -74,70 +24,6 @@ import functools
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-_PID = "_gr_pid"
-_MID = "_gr_mid"
-_BASE = "_gr_base"
-_OFF = "_gr_off"
-
-
-def _ranked(
-    df: DataFrame,
-    order_cols: list[Column],
-    out: str,
-    num_partitions: int | None = None,
-) -> tuple[DataFrame, int]:
-    """df + a 1-based global row number ``out`` in ``order_cols`` order
-    (which must be total — include a unique tie-break), plus the total
-    row count (a free by-product of the offset pass)."""
-    spark = df.sparkSession
-    n_parts = int(
-        num_partitions
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    tagged = (
-        df.repartitionByRange(n_parts, *order_cols)
-        .sortWithinPartitions(*order_cols)
-        .withColumn(_PID, F.spark_partition_id())
-        .withColumn(_MID, F.monotonically_increasing_id())
-        .localCheckpoint()  # pin the sampled range boundaries + ids
-    )
-    # <= n_parts rows: bounded by cluster configuration, not by data —
-    # the same driver-side counts pass RDD.zipWithIndex performs.
-    parts = tagged.groupBy(_PID).agg(
-        F.count("*").alias("c"), F.min(_MID).alias("b")
-    ).collect()
-    rows, acc = [], 0
-    for r in sorted(parts, key=lambda r: r[_PID]):
-        rows.append((r[_PID], r["b"], acc))
-        acc += r["c"]
-    offsets = spark.createDataFrame(
-        rows, f"{_PID} int, {_BASE} long, {_OFF} long"
-    )
-    ranked = (
-        tagged.join(F.broadcast(offsets), _PID)
-        .withColumn(
-            out,
-            (F.col(_OFF) + (F.col(_MID) - F.col(_BASE)) + F.lit(1)).cast(
-                "long"
-            ),
-        )
-        .drop(_PID, _MID, _BASE, _OFF)
-    )
-    return ranked, acc
-
-
-def global_row_number(
-    df: DataFrame,
-    order_cols: list[Column],
-    out: str = "rn",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Distributed ``ROW_NUMBER() OVER (ORDER BY order_cols)`` — see
-    module docstring. ``order_cols`` must be a total order."""
-    ranked, _ = _ranked(df, order_cols, out, num_partitions)
-    return ranked
-
 
 _MAX_BUCKET_ROWS = 1_000_000  # (group, bucket) subtotal collect guard
 
@@ -158,11 +44,9 @@ def grouped_weighted_quantile_rows(
 
     ``Window.partitionBy(group)`` caps parallelism at the number of
     groups: with 3 groups, three tasks each sort a data-linear third
-    of the corpus forever — a stage class no cluster size rescues
-    (the dual failure mode to the partitionless window, which
-    ``global_row_number`` above addresses). The fix is a two-pass
-    bucket search in PURE INTEGER arithmetic — no sort, no range
-    exchange, no sampling pass, no checkpoint:
+    of the corpus forever — a stage class no cluster size rescues.
+    The fix is a two-pass bucket search in PURE INTEGER arithmetic —
+    no sort, no range exchange, no sampling pass, no checkpoint:
 
     1. quantize the integer order value (``value_int_col``, e.g.
        price in cents) to buckets ``v >> bucket_shift`` and aggregate
@@ -279,38 +163,3 @@ def grouped_weighted_quantile_rows(
         "_entry"
     )
 
-
-def global_ntile(
-    df: DataFrame,
-    k: int,
-    order_cols: list[Column],
-    out: str = "tile",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Distributed ``NTILE(k) OVER (ORDER BY order_cols)`` (exact SQL
-    semantics: bucket sizes differ by at most one, larger buckets
-    first). ``order_cols`` must be a total order."""
-    rn_col = f"_gr_rn_{out}"
-    # the quoted form for every PARSED reference (F.col / F.expr):
-    # ``out`` is caller-controlled and may contain spaces, reserved
-    # words, or backticks — an embedded backtick must be doubled, the
-    # SQL identifier escape, or it terminates the quoting early and
-    # corrupts the parsed expression (ADVICE r12). withColumn/drop
-    # take the RAW name: they resolve literally, never parse.
-    rn = "`" + rn_col.replace("`", "``") + "`"
-    ranked, n = _ranked(df, order_cols, rn_col, num_partitions)
-    bs, rem = divmod(n, k)
-    if bs == 0:
-        # n < k: tiles 1..n, one row each
-        tile = F.col(rn)
-    else:
-        # SQL `div` is true integral division (stays in longs at any
-        # magnitude); Column `/` on two longs is a DOUBLE divide,
-        # which would round past 2^53.
-        cut = rem * (bs + 1)
-        tile = F.expr(
-            f"CASE WHEN {rn} <= {cut}"
-            f" THEN ({rn} - 1) div {bs + 1} + 1"
-            f" ELSE {rem} + ({rn} - {cut} - 1) div {bs} + 1 END"
-        )
-    return ranked.withColumn(out, tile.cast("long")).drop(rn_col)

@@ -78,30 +78,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Σ aᵢ·bᵢ as an unrolled left-associative add chain over a known
-    dimension. Same additions in the same order as the sequential fold
-    (bitwise-identical result), but as a flat expression tree that
-    whole-stage codegen compiles — higher-order-function lambdas are
-    interpreted per element, which dominates all-pairs similarity cost
-    (measured ~4× on the cosine-pairs query at sf0.1)."""
-    if dim <= 0:
-        return F.lit(0.0)
-    total: Column | None = None
-    for i in range(dim):
-        # cast BEFORE multiplying, like dot(): on array<float> input a
-        # float×float product would stay single-precision and the
-        # whole chain would diverge from the double fold
-        term = a.getItem(i).cast("double") * b.getItem(i).cast("double")
-        total = term if total is None else total + term
-    # same loud contract as dot(): a NULL chain with non-null inputs
-    # means a NULL element (an array shorter than ``dim`` already
-    # raises INVALID_ARRAY_INDEX under the pinned ANSI mode) — corrupt
-    # input, not data. One coalesce, no extra traversal of the hot
-    # unrolled chain.
-    return _null_vec_or_loud(a, b, total)
-
-
 # ---------------------------------------------------------------------------
 # Order-independent exact mean machinery (scaled-integer sums)
 # ---------------------------------------------------------------------------

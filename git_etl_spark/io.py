@@ -23,8 +23,6 @@ from pyspark.sql.types import LongType
 
 from .schemas import CORPUS_TABLES
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # applicationIds whose session already had ANSI pinned by load_table —
 # one set per driver process, so the pin happens once per session.
 _ANSI_PINNED: set[str] = set()
@@ -97,10 +95,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load_table(spark, sf_dir, n) for n in names)
-
-
 def dataset_fingerprint(sf_dir: str, *names: str) -> str:
     """Content-change fingerprint of one or more corpus tables under
     ``sf_dir``: sorted (relpath, mtime_ns, size) triples per table.
@@ -150,8 +144,3 @@ def dataset_fingerprint(sf_dir: str, *names: str) -> str:
             parts.append(f"{name}:missing")
     return "|".join(parts)
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view for ``spark.sql``."""
-    for name in CORPUS_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

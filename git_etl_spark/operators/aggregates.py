@@ -655,13 +655,10 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; DuckDB widens to HUGEINT automatically) and the result in
     integer ppm — no float accumulation anywhere.
 
-    The rank is the only ordered step; it runs over the per-customer
-    aggregate (|customers| rows). At extreme cardinalities the rank
-    swaps mechanically for ``functions.ranking.global_row_number``
-    (two-phase zipWithIndex-style, exact — crossover ~1M rows at 32
-    cores), or the statistic computes from an equi-depth histogram's
-    bucket sums (agg_equidepth_histogram) with bounded error; here
-    the exact single-task form doubles as its oracle."""
+    The rank is the only ordered step; its input is bounded by the
+    customer count, not the order count: it runs over the per-customer
+    aggregate (|customers| rows), where a single-task sort costs
+    milliseconds."""
     orders = load_table(spark, sf_dir, "orders")
     # unknown-spend quarantine + pinned tie-break null order (r15
     # numeric-band null sweep): a customer whose every order price is

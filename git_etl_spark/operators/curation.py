@@ -753,11 +753,9 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.sql.optimizer.windowGroupLimitThreshold (default 1000) <
     CURRICULUM_HEAD (2000), so it never fired — a plan audit, not a
     bench delta, caught it (the claim had been asserted in a
-    docstring, never in a test; now it is). At 100 TB you'd publish
-    the FULL order with the zipWithIndex-style two-phase ranking —
-    implemented as ``functions.ranking.global_row_number`` (measured
-    crossover ~1M rows at 32 cores; the prefix here is 2000, far
-    below it) — instead of numbering a prefix."""
+    docstring, never in a test; now it is). The numbering window's
+    input is therefore bounded by CURRICULUM_HEAD rows at any corpus
+    size."""
     docs = load_table(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     stop_ratio = (

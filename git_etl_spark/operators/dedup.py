@@ -876,14 +876,9 @@ def dedup_ngram_jaccard(
     # the rarest-first PPJoin order — no per-occurrence window needed.
     n_vocab = docfreq.count()
     n_words = (n_vocab + 63) // 64
-    # the dictionary rank is data-linear (|V| grows with the corpus):
-    # at extreme vocabularies this window swaps mechanically for
-    # functions.ranking.global_row_number (two-phase zipWithIndex-
-    # style, bit-identical) — measured here and REJECTED below the
-    # crossover (r11: 3.17 -> 4.14 s at sf0.1, 15.5 -> 19.3 s at
-    # 10x/32c; |V| is ~20k at 10x, milliseconds for the single-task
-    # rank, while the primitive's checkpoint + offsets-collect jobs
-    # sit on this query's critical path)
+    # the dictionary rank runs over the aggregated vocabulary, not the
+    # occurrences: its input is bounded by |V| (~20k shingles at 10x
+    # sf0.1), milliseconds for the single-task rank
     vocab = docfreq.select(
         "s",
         (F.row_number().over(Window.orderBy(F.asc("df"), F.asc("s"))) - 1).alias(

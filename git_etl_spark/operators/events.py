@@ -1008,18 +1008,9 @@ def events_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic, composed into the classic 3-digit RFM code.
 
     One shuffle aggregates events to one row per user; the three
-    ntile windows run over that per-user aggregate (|users| rows, not
-    |events|). |users| is data-linear, so at extreme scale each ntile
-    swaps MECHANICALLY for ``functions.ranking.global_ntile`` — the
-    two-phase zipWithIndex-style ranking (range exchange +
-    per-partition numbering + broadcast offsets), bit-identical SQL
-    ntile semantics with no single-task window. The swap was measured
-    HERE and REJECTED below the crossover: 0.77 -> 3.00 s at sf0.1
-    and 1.07 -> 3.88 s at 10x/32c (three sequential rankings, each
-    paying the primitive's fixed checkpoint + offsets-collect jobs on
-    a ~20k-row aggregate the single-task sort handles in
-    milliseconds). See ranking.py's crossover microbench for where
-    the trade inverts."""
+    ntile windows run over that per-user aggregate, so their input is
+    bounded by |users| (~20k rows at 10x sf0.1), not |events| — a
+    single-task sort of it takes milliseconds."""
     # NULL-user quarantine mirrored (r15 band null sweep): untagged
     # purchases are not a customer — the NULL pseudo-user also made
     # the ntile user_id tie-break engine-dependent (Spark ASC is

@@ -912,16 +912,9 @@ def text_surprisal_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale plan: the unigram table is a per-term partial-aggregated
     count (shuffle ∝ vocabulary); the score join is token→cnt keyed by
     term; per-doc totals partial-aggregate. The only global order is
-    the final NTILE over per-DOC rows — data-linear, so at extreme
-    scale it swaps MECHANICALLY for
-    ``functions.ranking.global_ntile`` (two-phase zipWithIndex-style
-    ranking, bit-identical ntile semantics, no single-task window and
-    no approx-quantile fallback). The swap was measured HERE and
-    REJECTED below the crossover: 0.74 -> 1.49 s at sf0.1 and
-    2.34 -> 3.61 s at 10x/32c — the per-doc table is ~50k rows at
-    10x, milliseconds for the single-task sort, while the primitive
-    pays fixed checkpoint + offsets-collect jobs. See ranking.py's
-    crossover microbench for where the trade inverts.
+    the final NTILE over the aggregated per-DOC rows: its input is
+    bounded by |documents| (~50k rows at 10x sf0.1), milliseconds for
+    the single-task sort.
 
     The corpus token total comes from SUMMING THE UNIGRAM TABLE
     rather than re-aggregating the token stream: same number,

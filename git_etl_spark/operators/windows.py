@@ -165,11 +165,9 @@ def window_moving_7day_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def window_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NTILE bucketing (global window — acceptable only because the
-    result is immediately re-aggregated; the 100 TB shape is
-    ``functions.ranking.global_ntile`` when exact tiles are required
-    — crossover ~1M rows at 32 cores — or percentile_approx when
-    approximate cut points suffice, see agg_percentiles_approx).
+    """NTILE bucketing (global window over the customer dimension: its
+    input is bounded by |customers|, and the result is immediately
+    re-aggregated to four rows).
 
     NULLS LAST pinned on BOTH engines: Spark's ascending default is
     NULLS FIRST, DuckDB's is NULLS LAST, so an unpinned sort sends

@@ -67,10 +67,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     )
 
 
-def has_sort_merge_join(df: DataFrame) -> bool:
-    return "SortMergeJoin" in physical_plan(df)
-
-
 def has_take_ordered(df: DataFrame) -> bool:
     """Top-k planned as TakeOrderedAndProject (no global sort)."""
     return "TakeOrderedAndProject" in physical_plan(df)

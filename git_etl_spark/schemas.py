@@ -15,7 +15,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -53,17 +52,6 @@ COMMITS_SCHEMA = StructType(
     ]
 )
 
-# reference db/schema.ts:84-94 (file_changes), natural key (repo_name, sha, file_path)
-FILE_CHANGES_SCHEMA = StructType(
-    [
-        StructField("repo_name", StringType(), False),
-        StructField("sha", StringType(), False),
-        StructField("file_path", StringType(), False),
-        StructField("additions", LongType(), False),
-        StructField("deletions", LongType(), False),
-    ]
-)
-
 # reference src/git-parser.ts:21-29 (GitTag) + db/schema.ts:102-115 (tags)
 TAGS_SCHEMA = StructType(
     [
@@ -75,46 +63,6 @@ TAGS_SCHEMA = StructType(
         StructField("tag_date", TimestampType(), True),
         StructField("message", StringType(), True),
         StructField("is_annotated", BooleanType(), False),
-    ]
-)
-
-# reference src/git-parser.ts:31-37 (Author) + db/schema.ts:69-78 (authors)
-AUTHORS_SCHEMA = StructType(
-    [
-        StructField("email", StringType(), False),
-        StructField("name", StringType(), True),
-        StructField("first_commit_at", TimestampType(), True),
-        StructField("last_commit_at", TimestampType(), True),
-        StructField("total_commits", LongType(), False),
-    ]
-)
-
-# reference db/schema.ts:54-63 (repos)
-REPOS_SCHEMA = StructType(
-    [
-        StructField("name", StringType(), False),
-        StructField("language", StringType(), True),
-        StructField("is_archived", BooleanType(), False),
-        StructField("last_commit_at", TimestampType(), True),
-        StructField("total_commits", LongType(), False),
-    ]
-)
-
-# reference db/schema.ts:29-46 (pull_requests; placeholder — never written)
-PULL_REQUESTS_SCHEMA = StructType(
-    [
-        StructField("repo_name", StringType(), False),
-        StructField("pr_number", LongType(), False),
-        StructField("title", StringType(), True),
-        StructField("author_email", StringType(), True),
-        StructField("state", StringType(), True),
-        StructField("created_at", TimestampType(), True),
-        StructField("merged_at", TimestampType(), True),
-        StructField("closed_at", TimestampType(), True),
-        StructField("additions", LongType(), True),
-        StructField("deletions", LongType(), True),
-        StructField("time_to_merge_hours", DoubleType(), True),
-        StructField("review_comments", LongType(), True),
     ]
 )
 

@@ -1,20 +1,17 @@
-"""Snapshot-versioned tables — time travel without a table format.
+"""Warehouse snapshots — a cross-table commit without a table format.
 
-Each publish writes a new immutable snapshot dir (``v000N``) and then
-atomically repoints a one-line ``_CURRENT`` pointer file; readers
-resolve the pointer (or an explicit version) and only ever see a fully
-written snapshot. This is the minimal mechanism behind Delta/Iceberg
-time travel, expressed directly on a filesystem:
+Each commit writes one new immutable snapshot dir (``v000N``) per table
+it touches, then a JSON manifest mapping every table to its snapshot
+version, and finally atomically repoints a one-line ``_CURRENT``
+pointer at that manifest. Readers resolve the pointer (or an explicit
+warehouse version) and then the manifest, so they only ever see one
+fully written, mutually consistent set of table versions:
 
 - writers never mutate a published snapshot (append-only dirs);
 - the pointer swap is a single rename → readers get atomic cutover;
-- old snapshots stay readable until ``prune`` (retention) removes
-  them, enabling reproducible re-reads of training data as-of a run.
-
-At 100 TB the same layout holds per partition, and snapshots share
-unchanged files via hard links or object-store copy-on-write;
-correctness (atomicity, isolation of concurrent reads from an
-in-flight publish, exact as-of reads) is what the tests assert.
+- old manifests and the snapshots they reference stay readable until
+  ``prune_warehouse`` (retention) removes them, which also collects
+  the unreferenced dirs a crashed commit leaves behind.
 """
 
 from __future__ import annotations
@@ -36,40 +33,15 @@ def _versions(table: str) -> list[int]:
     )
 
 
-def publish_snapshot(df: DataFrame, table: str) -> int:
-    """Write the next snapshot and atomically repoint ``_CURRENT``.
-    Returns the new version number."""
-    os.makedirs(table, exist_ok=True)
-    version = (_versions(table)[-1] + 1) if _versions(table) else 1
-    snap = os.path.join(table, f"v{version:04d}")
-    df.write.mode("overwrite").parquet(snap)
-    tmp = os.path.join(table, f".{_POINTER}.{uuid.uuid4().hex[:8]}")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(table, _POINTER))  # atomic cutover
-    return version
-
-
-def current_version(table: str) -> int:
-    with open(os.path.join(table, _POINTER)) as f:
+def current_version(warehouse: str) -> int:
+    with open(os.path.join(warehouse, _POINTER)) as f:
         return int(f.read().strip())
-
-
-def read_snapshot(
-    spark: SparkSession, table: str, version: int | None = None
-) -> DataFrame:
-    """Read the current snapshot, or an explicit version (time travel)."""
-    v = current_version(table) if version is None else version
-    path = os.path.join(table, f"v{v:04d}")
-    if not os.path.isdir(path):
-        raise FileNotFoundError(f"snapshot v{v:04d} not present in {table}")
-    return spark.read.parquet(path)
 
 
 def publish_warehouse_snapshot(
     tables: dict[str, DataFrame], warehouse: str
 ) -> int:
-    """K6 upgraded to *true* cross-table atomicity: write one new
+    """Cross-table atomic commit (K6): write one new
     snapshot dir per table, then commit a single manifest (JSON map of
     table → snapshot version) and atomically repoint the warehouse
     ``_CURRENT`` at it. Readers resolve the manifest first, so they
@@ -141,8 +113,8 @@ def read_warehouse_table(
     version: int | None = None,
 ) -> DataFrame:
     """Read one table at a *warehouse* version (default: current) —
-    every table read through the same manifest is mutually consistent,
-    which per-table pointers cannot guarantee."""
+    every table read through the same manifest is mutually
+    consistent."""
     manifest = _warehouse_manifest(warehouse, version)
     return spark.read.parquet(
         os.path.join(warehouse, table, f"v{manifest[table]:04d}")
@@ -178,15 +150,3 @@ def prune_warehouse(warehouse: str, keep_last: int = 2) -> list[str]:
                 removed.append(f"{entry}/v{v:04d}")
     return removed
 
-
-def prune_snapshots(table: str, keep_last: int = 2) -> list[int]:
-    """Retention: drop all but the newest ``keep_last`` snapshots
-    (never the current one). Returns pruned version numbers."""
-    import shutil
-
-    cur = current_version(table)
-    vs = _versions(table)
-    to_drop = [v for v in vs[:-keep_last] if v != cur] if keep_last else []
-    for v in to_drop:
-        shutil.rmtree(os.path.join(table, f"v{v:04d}"))
-    return to_drop

@@ -134,13 +134,24 @@ def parse_git_log_text(text: str, repo_name: str, branch: str) -> list[dict]:
     return commits
 
 
+class GitError(subprocess.CalledProcessError):
+    """A git command that exited non-zero. Its message is git's own
+    error line ("fatal: unable to read tree ..."), which a bare
+    ``CalledProcessError`` keeps only in ``stderr``."""
+
+    def __str__(self) -> str:
+        # cmd is ["git", "-C", repo_path, subcommand, ...]
+        return f"git {self.cmd[3]} exited {self.returncode}: {self.stderr.strip()}"
+
+
 def _run_git(repo_path: str, *args: str) -> str:
+    """stdout of ``git -C repo_path *args``; a non-zero exit raises
+    ``GitError``. Every git call in ``sources/`` goes through here."""
     out = subprocess.run(
-        ["git", "-C", repo_path, *args],
-        capture_output=True,
-        text=True,
-        check=True,
+        ["git", "-C", repo_path, *args], capture_output=True, text=True
     )
+    if out.returncode:
+        raise GitError(out.returncode, out.args, out.stdout, out.stderr)
     return out.stdout
 
 
@@ -159,18 +170,14 @@ def has_unborn_head(repo_path: str) -> bool:
     """F3: True when HEAD names no commit yet (a fresh ``git init``),
     where ``rev-parse --verify -q`` exits 1; False when it names one
     (exit 0). Anything else (not a repository, a missing path) raises
-    ``CalledProcessError``, so the caller reports that repository as
-    failed."""
-    probe = subprocess.run(
-        ["git", "-C", repo_path, "rev-parse", "--verify", "-q", "HEAD"],
-        capture_output=True,
-        text=True,
-    )
-    if probe.returncode not in (0, 1):
-        raise subprocess.CalledProcessError(
-            probe.returncode, probe.args, probe.stdout, probe.stderr
-        )
-    return probe.returncode == 1
+    ``GitError``, so the caller reports that repository as failed."""
+    try:
+        _run_git(repo_path, "rev-parse", "--verify", "-q", "HEAD")
+    except GitError as exc:
+        if exc.returncode == 1:
+            return True
+        raise
+    return False
 
 
 def scan_repo_commits(repo_path: str, branch: str | None = None) -> list[dict]:

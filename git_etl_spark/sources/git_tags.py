@@ -13,13 +13,12 @@ carry nulls (reference ``src/git-parser.ts:322-345``).
 
 from __future__ import annotations
 
-import subprocess
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import TAGS_SCHEMA
-from .git_log import batch_table, repo_name_of, scan_isolated
+from .git_log import _run_git, batch_table, repo_name_of, scan_isolated
 
 FIELD_SEP = "\x00"
 RECORD_SEP = "\x00\x00REC\x00\x00"
@@ -110,20 +109,8 @@ def parse_tag_records(text: str, repo_name: str) -> list[dict]:
 
 def scan_repo_tags(repo_path: str) -> list[dict]:
     """S2 subprocess scan → parsed tag records."""
-    out = subprocess.run(
-        [
-            "git",
-            "-C",
-            repo_path,
-            "for-each-ref",
-            "refs/tags",
-            f"--format={TAG_FORMAT}",
-        ],
-        capture_output=True,
-        text=True,
-        check=True,
-    )
-    return parse_tag_records(out.stdout, repo_name_of(repo_path))
+    out = _run_git(repo_path, "for-each-ref", "refs/tags", f"--format={TAG_FORMAT}")
+    return parse_tag_records(out, repo_name_of(repo_path))
 
 
 def repo_tags_df(

@@ -35,7 +35,12 @@ EXTENSION_LANGUAGES: dict[str, str] = {
 
 def extension_of(file_path: str) -> str | None:
     """P11: lowercase extension; files without a dot have none
-    (reference ``src/git-parser.ts:227-231``)."""
+    (reference ``src/git-parser.ts:227-231``). A path git printed
+    C-quoted (``"na\\303\\257ve.py"``: non-ASCII bytes under the
+    default ``core.quotePath``) is read without its surrounding
+    quotes."""
+    if len(file_path) > 1 and file_path[0] == file_path[-1] == '"':
+        file_path = file_path[1:-1]
     name = file_path.rsplit("/", 1)[-1]
     if "." not in name:
         return None

@@ -64,22 +64,6 @@ def hourly_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame) -> DataFrame:
-    """Sliding 1-hour window every 15 minutes — each event lands in 4
-    overlapping buckets."""
-    return (
-        _with_event_time(events)
-        .withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("n"))
-        .select(
-            instant_to_ntz(F.col("w.start")).alias("win_start"),
-            instant_to_ntz(F.col("w.end")).alias("win_end"),
-            "n",
-        )
-    )
-
-
 def sessionized(events: DataFrame) -> DataFrame:
     """Session windows with a 10-minute inactivity gap — streaming twin
     of the batch lag/running-sum sessionization (same gap constant:
@@ -127,16 +111,6 @@ def dedup_within_watermark(events: DataFrame) -> DataFrame:
     if dict(events.dtypes).get("ts") == "timestamp_ntz":
         out = out.withColumn("ts", instant_to_ntz("ts"))
     return out
-
-
-def enrich_stream_static(events: DataFrame, dim: DataFrame, key: str = "user_id") -> DataFrame:
-    """Stream-static join: every micro-batch joins against the current
-    snapshot of a (small) dimension — the standard enrichment step
-    before a streaming aggregate. Stateless (no watermark needed on
-    either side); the dim is broadcast so each executor joins locally.
-    At 100 TB/day the dim refresh cadence is the micro-batch interval —
-    Spark re-plans the static side every batch, picking up updates."""
-    return _with_event_time(events).join(F.broadcast(dim), key)
 
 
 def purchase_click_attribution(events: DataFrame) -> DataFrame:

@@ -1,22 +1,21 @@
 #!/usr/bin/env python
-"""Crossover microbench: single-task global-window NTILE vs the
-two-phase distributed ranking (functions/ranking.global_ntile).
+"""Crossover microbench: the grouped cumulative window vs the
+integer-bucket search (functions/ranking.grouped_weighted_quantile_rows)
+for an exact weighted median over three groups.
 
-The round-11 A/B at the three production sites (events RFM, surprisal
-deciles, PPJoin sid) REJECTED the primitive: their window inputs are
-aggregate-sized (20-50k rows), where the single-task sort costs
-milliseconds and the primitive's fixed jobs (eager checkpoint,
-offsets collect, broadcast join) dominate. This script measures WHERE
-the trade inverts, on a synthetic relation whose size is the only
-variable — the number both the site docstrings and ranking.py cite.
+``Window.partitionBy(group)`` caps parallelism at the group count, so
+its cost grows with the rows per group; the bucket search pays a fixed
+collect of per-bucket subtotals and then windows one bucket. This
+script measures where the trade inverts, on a synthetic relation whose
+size is the only variable — the numbers ranking.py cites.
 
 Usage: python scripts/bench_ranking_crossover.py [rows ...]
-Prints one JSON line: {"cores": N, "rows": {n: {"window": s,
-"distributed": s}}}
+Prints one JSON line: {"cores": N, "weighted_median": {n:
+{"grouped_window": s, "bucket_search": s}}}
 
 Each size runs in THIS JVM (sizes are independent relations; no state
 leaks through spark.range), min-of-2 after a warm-up rep, forced
-through an aggregate sink so neither form collects n rows.
+through a per-group aggregate sink so neither form collects n rows.
 """
 
 from __future__ import annotations
@@ -31,36 +30,8 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from git_etl_spark.functions.ranking import global_ntile
+from git_etl_spark.functions.ranking import grouped_weighted_quantile_rows
 from git_etl_spark.session import get_spark
-
-
-def base(spark, n: int):
-    # deterministic, unsorted sort key with duplicates; unique
-    # tie-break on id — the same total-order contract the production
-    # sites use
-    return spark.range(n).select(
-        "id", (F.xxhash64("id") % 100_000).alias("v")
-    )
-
-
-def run_window(spark, n: int) -> float:
-    df = base(spark, n)
-    w = Window.orderBy(F.col("v").asc(), F.col("id").asc())
-    t0 = time.monotonic()
-    df.select(F.ntile(10).over(w).cast("long").alias("t")).agg(
-        F.sum("t")
-    ).collect()
-    return time.monotonic() - t0
-
-
-def run_distributed(spark, n: int) -> float:
-    df = base(spark, n)
-    t0 = time.monotonic()
-    global_ntile(
-        df, 10, [F.col("v").asc(), F.col("id").asc()], "t"
-    ).agg(F.sum("t")).collect()
-    return time.monotonic() - t0
 
 
 def wm_base(spark, n: int):
@@ -75,8 +46,6 @@ def wm_base(spark, n: int):
 
 
 def run_wm_window(spark, n: int) -> float:
-    from pyspark.sql import Window
-
     df = wm_base(spark, n)
     w = (
         Window.partitionBy("g")
@@ -100,10 +69,6 @@ def run_wm_window(spark, n: int) -> float:
 
 
 def run_wm_bucket(spark, n: int) -> float:
-    from git_etl_spark.functions.ranking import (
-        grouped_weighted_quantile_rows,
-    )
-
     df = wm_base(spark, n)
     t0 = time.monotonic()
     (
@@ -124,22 +89,15 @@ def main() -> None:
     ]
     spark = get_spark(app_name="ranking-crossover")
     cores = spark.sparkContext.defaultParallelism
-    out: dict[str, dict[str, float]] = {}
     wm: dict[str, dict[str, float]] = {}
     for n in sizes:
-        reps_w = [run_window(spark, n) for _ in range(3)]
-        reps_d = [run_distributed(spark, n) for _ in range(3)]
-        out[str(n)] = {
-            "window": round(min(reps_w[1:]), 3),
-            "distributed": round(min(reps_d[1:]), 3),
-        }
         wm_w = [run_wm_window(spark, n) for _ in range(3)]
         wm_b = [run_wm_bucket(spark, n) for _ in range(3)]
         wm[str(n)] = {
             "grouped_window": round(min(wm_w[1:]), 3),
             "bucket_search": round(min(wm_b[1:]), 3),
         }
-    print(json.dumps({"cores": cores, "rows": out, "weighted_median": wm}))
+    print(json.dumps({"cores": cores, "weighted_median": wm}))
 
 
 if __name__ == "__main__":

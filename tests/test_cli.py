@@ -101,14 +101,16 @@ def test_unborn_head_skips_exit_0(spark, tmp_path, capsys):
 
 def test_scan_failure_exit_1(spark, tmp_path, capsys):
     """A repository whose ``HEAD`` resolves but whose ``git log`` fails
-    prints ``ETL failed`` and exits 1 (``main.ts:421-430``), with no
-    traceback and no warehouse written."""
+    prints ``ETL failed`` with git's own error line and exits 1
+    (``main.ts:421-430``), with no traceback and no warehouse written."""
     from git_etl_spark.cli import main
 
     repo = corrupt_history_repo(tmp_path)
     out = tmp_path / "warehouse"
     assert main([str(repo), "--output", str(out)]) == 1
-    assert "ETL failed:" in capsys.readouterr().err
+    err = capsys.readouterr().err
+    assert "ETL failed: git log exited 128" in err
+    assert "unable to read tree" in err
     assert not out.exists()
 
 

@@ -305,16 +305,33 @@ def corrupt_history_repo(root):
 
 
 @pytest.mark.parametrize(
-    "make_bad", [_plain_directory, corrupt_history_repo],
+    "make_bad, git_said",
+    [
+        (_plain_directory, "not a git repository"),
+        (corrupt_history_repo, "unable to read tree"),
+    ],
     ids=["not-a-repo", "corrupt-history"],
 )
-def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypatch, make_bad):
+def test_config_run_isolates_non_git_directory(
+    spark, tmp_path, capsys, monkeypatch, make_bad, git_said
+):
     """O2: a directory that is not a git repository, or a repository
-    whose commit scan fails, fails on its own; the other repositories
-    in the config still load."""
+    whose commit scan fails, fails on its own with git's own error
+    line; the other repositories in the config still load."""
     import json
 
     from git_etl_spark.cli import main
+    from git_etl_spark.plans import git_pipeline
+
+    # keep each run report: the config-mode banner prints counts only
+    reports = []
+    etl_repos = git_pipeline.etl_repos
+
+    def recording_etl_repos(*args, **kwargs):
+        reports.append(etl_repos(*args, **kwargs))
+        return reports[-1]
+
+    monkeypatch.setattr(git_pipeline, "etl_repos", recording_etl_repos)
 
     # git must not find a repository above the plain directory
     monkeypatch.setenv("GIT_CEILING_DIRECTORIES", str(tmp_path))
@@ -331,6 +348,9 @@ def test_config_run_isolates_non_git_directory(spark, tmp_path, capsys, monkeypa
     stdout = capsys.readouterr().out
     assert "Processed 1/2 repositories successfully" in stdout
     assert "1 repositories failed" in stdout
+    ((failure,),) = [r["failed"] for r in reports]
+    assert failure["repo"] == str(bad)
+    assert git_said in failure["error"]
     (row,) = spark.read.parquet(str(out / "commits")).collect()
     assert row.repo_name == "proj-good"
     (row,) = spark.read.parquet(str(out / "repos")).collect()

@@ -201,6 +201,9 @@ def test_extension_of():
     assert extension_of("a/b/c.PY") == "py"
     assert extension_of("Makefile") is None
     assert extension_of("x/.gitignore") == "gitignore"
+    # git ls-files C-quotes non-ASCII names (core.quotePath)
+    assert extension_of('"na\\303\\257ve.py"') == "py"
+    assert extension_of('"d\\303\\251p/Makefile"') is None
 
 
 def test_detect_language_argmax():
@@ -211,6 +214,12 @@ def test_detect_language_argmax():
 def test_detect_language_ignores_unknown_exts():
     assert detect_language(["a.md", "b.txt", "LICENSE"]) is None
     assert detect_language([]) is None
+
+
+def test_detect_language_quoted_paths():
+    # `git ls-files` output for été.py, naïve.py and a.go
+    files = ['"\\303\\251t\\303\\251.py"', '"na\\303\\257ve.py"', "a.go"]
+    assert detect_language(files) == "Python"
 
 
 def test_detect_language_tie_breaks_on_extension():

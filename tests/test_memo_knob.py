@@ -98,23 +98,6 @@ def test_bypass_written_dirs_still_cleaned(spark, monkeypatch):
     assert not os.path.exists(fmt) and not os.path.exists(src)
 
 
-def test_global_ntile_non_identifier_out_name(spark):
-    """``out`` feeds a generated column name into raw SQL — names with
-    spaces/reserved words must survive (backtick quoting)."""
-    from pyspark.sql import functions as F
-
-    from git_etl_spark.functions.ranking import global_ntile
-
-    df = spark.range(10).select(F.col("id"))
-    got = global_ntile(df, 3, [F.col("id")], out="tile 2", num_partitions=2)
-    rows = {(r["id"], r["tile 2"]) for r in got.collect()}
-    # NTILE(3) over 10 rows: sizes 4,3,3
-    want = {(i, 1) for i in range(4)} | {(i, 2) for i in range(4, 7)} | {
-        (i, 3) for i in range(7, 10)
-    }
-    assert rows == want
-
-
 def _load(spark, sf_dir, name):
     """One ``load_table`` call under its own job group: the Spark jobs
     it ran, and the frame."""

@@ -302,35 +302,3 @@ def test_dot_partial_null_raises_on_both_engines(spark):
             f"SELECT {duck_dot('a', 'b')} FROM (SELECT [1.0,2.0,5.0]::DOUBLE[] a, [3.0,4.0]::DOUBLE[] b)"
         )
 
-
-def test_dot_unrolled_same_loud_contract(spark):
-    """The hot unrolled variant enforces the same contract through one
-    coalesce — no extra traversal of the add chain."""
-    import pytest
-
-    from git_etl_spark.functions.vector import dot_unrolled
-
-    df = spark.createDataFrame(
-        [([1.0, 2.0], [3.0, 4.0])], "a array<double>, b array<double>"
-    )
-    got = df.select(
-        dot_unrolled(F.col("a"), F.col("b"), 2).alias("d")
-    ).collect()[0]["d"]
-    assert got == 11.0
-
-    dfn = spark.createDataFrame(
-        [(None, [3.0, 4.0])], "a array<double>, b array<double>"
-    )
-    assert (
-        dfn.select(dot_unrolled(F.col("a"), F.col("b"), 2).alias("d"))
-        .collect()[0]["d"]
-        is None
-    )
-
-    dfp = spark.createDataFrame(
-        [([1.0, None], [3.0, 4.0])], "a array<double>, b array<double>"
-    )
-    with pytest.raises(Exception, match="partially-NULL"):
-        dfp.select(
-            dot_unrolled(F.col("a"), F.col("b"), 2).alias("d")
-        ).collect()

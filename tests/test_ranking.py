@@ -1,96 +1,9 @@
-"""Distributed global ranking (functions/ranking.py) must be
-bit-identical to the single-task global window it replaces, for every
-shape that exercises the bucket arithmetic: n % k == 0, n % k != 0,
-n < k, duplicate sort values under a unique tie-break, and any input
-partitioning (range boundaries may land anywhere without changing a
-rank)."""
+"""The bucket-search weighted quantile (functions/ranking.py) must be
+bit-identical to the grouped window it replaces, at every bucket
+granularity, quantile and group-key shape (NULL and integer keys)."""
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
-
-from git_etl_spark.functions.ranking import global_ntile, global_row_number
-
-
-def _rows(n, dup_every=7):
-    # duplicate `v` values every dup_every ids — ties the tie-break on
-    # id must resolve identically in both forms
-    return [(i, (i * 2654435761 % 1000) // dup_every) for i in range(n)]
-
-
-def _df(spark, n, parts):
-    return spark.createDataFrame(
-        _rows(n), "id long, v long"
-    ).repartition(parts)
-
-
-def test_row_number_matches_window(spark):
-    df = _df(spark, 503, 7)
-    order = [F.col("v").desc(), F.col("id").asc()]
-    got = {
-        (r["id"], r["rn"])
-        for r in global_row_number(df, order, "rn").collect()
-    }
-    w = Window.orderBy(F.col("v").desc(), F.col("id").asc())
-    want = {
-        (r["id"], r["rn"])
-        for r in df.select("id", F.row_number().over(w).alias("rn")).collect()
-    }
-    assert got == want
-
-
-def test_ntile_matches_window_all_shapes(spark):
-    for n, k in [(500, 5), (503, 5), (503, 10), (3, 5), (1, 4)]:
-        df = _df(spark, n, 5)
-        order = [F.col("v").asc(), F.col("id").asc()]
-        got = {
-            (r["id"], r["t"])
-            for r in global_ntile(df, k, order, "t").collect()
-        }
-        w = Window.orderBy(F.col("v").asc(), F.col("id").asc())
-        want = {
-            (r["id"], r["t"])
-            for r in df.select(
-                "id", F.ntile(k).over(w).cast("long").alias("t")
-            ).collect()
-        }
-        assert got == want, (n, k)
-
-
-def test_partitioning_invariance(spark):
-    # the rank must not depend on where sampled range boundaries land:
-    # rerun with pathological input partitioning and partition counts
-    order = [F.col("v").asc(), F.col("id").asc()]
-    base = None
-    for in_parts, n_parts in [(1, 32), (13, 3), (32, 1), (5, 8)]:
-        df = _df(spark, 211, in_parts)
-        got = sorted(
-            (r["id"], r["rn"])
-            for r in global_row_number(
-                df, order, "rn", num_partitions=n_parts
-            ).collect()
-        )
-        if base is None:
-            base = got
-        assert got == base, (in_parts, n_parts)
-
-
-def test_empty_input(spark):
-    df = spark.createDataFrame([], "id long, v long")
-    assert global_row_number(df, [F.col("v")], "rn").count() == 0
-    assert global_ntile(df, 5, [F.col("v")], "t").count() == 0
-
-
-def test_no_global_window_in_plan(spark):
-    """The whole point: the consumer's physical plan must contain a
-    rangepartitioning exchange and NO Window node at all — ranks come
-    from checkpoint-pinned ids plus a broadcast offsets join."""
-    df = _df(spark, 100, 4)
-    ranked = global_ntile(df, 5, [F.col("v").asc(), F.col("id").asc()], "t")
-    from git_etl_spark.plans.audit import physical_plan
-
-    plan = physical_plan(ranked)
-    assert "Window" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_grouped_weighted_quantile_matches_window(spark):
@@ -343,29 +256,3 @@ def test_grouped_weighted_quantile_int_group_key(spark):
         .collect()
     )
     assert len(out) == 4 and all(r["med"] is not None for r in out)
-
-
-def test_global_ntile_backtick_in_out_name(spark):
-    """``out`` is caller-controlled and lands inside a parsed SQL
-    expression via the generated row-number column's name; an embedded
-    backtick must be doubled (the SQL identifier escape) or it would
-    terminate the quoting early and corrupt the expression (ADVICE
-    r12). The tiles must be the exact NTILE semantics regardless of
-    the hostile name."""
-    df = spark.createDataFrame([(i,) for i in range(10)], "v long")
-    out = "ti`le"  # embedded backtick
-    got = {
-        r["v"]: r[out]
-        for r in global_ntile(df, 3, [F.col("v")], out).collect()
-    }
-    # NTILE(3) over 10 rows: sizes 4,3,3 — larger buckets first
-    want = {v: (1 if v < 4 else 2 if v < 7 else 3) for v in range(10)}
-    assert got == want
-
-    # n < k branch parses the quoted name too (tiles 1..n)
-    small = spark.createDataFrame([(1,), (2,)], "v long")
-    got_small = {
-        r["v"]: r[out]
-        for r in global_ntile(small, 5, [F.col("v")], out).collect()
-    }
-    assert got_small == {1: 1, 2: 2}

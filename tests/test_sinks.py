@@ -78,36 +78,6 @@ def test_publish_rolls_back_on_failure(spark, tmp_path):
     assert {r.payload for r in spark.read.parquet(final).collect()} == {"v1"}
 
 
-def test_jsonl_corrupt_record_quarantine(spark, tmp_path):
-    """E12 error-row isolation: malformed JSON lines land in quarantine
-    with the raw text; clean rows are unaffected; nothing is dropped."""
-    from pyspark.sql import types as T
-
-    from git_etl_spark.sources.jsonl import read_jsonl_with_quarantine
-
-    src = tmp_path / "rows.jsonl"
-    src.write_text(
-        '{"id": 1, "name": "ok"}\n'
-        "not json at all\n"
-        '{"id": 2, "name": "also ok"}\n'
-        '{"id": "wrong-type-but-coercible?", "name": 3}\n'
-        '{"id": 4}\n'
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("name", T.StringType()),
-        ]
-    )
-    clean, quarantine = read_jsonl_with_quarantine(spark, str(src), schema)
-    clean_rows = {(r.id, r.name) for r in clean.collect()}
-    bad = [r.raw_line for r in quarantine.collect()]
-    assert (1, "ok") in clean_rows and (2, "also ok") in clean_rows
-    assert (4, None) in clean_rows  # missing field is null, not corrupt
-    assert clean.count() + quarantine.count() == 5
-    assert any("not json" in b for b in bad)
-
-
 def test_parquet_schema_evolution_merge(spark, tmp_path):
     """Data-lake schema evolution: files written with different (but
     compatible) schemas read back as the union schema under

@@ -187,26 +187,6 @@ def test_stateful_running_totals_match_batch(spark, events_dir):
     assert final == want
 
 
-def test_stream_static_enrichment(spark, events_dir):
-    """Stream-static broadcast join: every streamed event must carry
-    its dimension attributes; row count is preserved (inner join on a
-    complete dim)."""
-    from git_etl_spark.io import load_table
-    from git_etl_spark.streaming.events_stream import enrich_stream_static
-
-    dim = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("first_seen"))
-    )
-    _run_to_memory(
-        enrich_stream_static(_stream(spark, events_dir), dim), "enriched"
-    )
-    rows = spark.sql("SELECT * FROM enriched").collect()
-    assert len(rows) == 1000
-    assert all(r.first_seen is not None and r.first_seen <= r.ts for r in rows)
-
-
 def test_stream_stream_join_matches_batch(spark, tmp_path_factory):
     """Stream-stream time-bounded self-join replayed in ONE micro-batch
     (single source file → no cross-batch state eviction) must produce

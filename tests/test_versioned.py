@@ -1,53 +1,5 @@
-"""Snapshot-versioned tables: atomic cutover, exact as-of reads,
+"""Warehouse snapshots: atomic cross-table cutover, exact as-of reads,
 retention pruning."""
-
-from __future__ import annotations
-
-import pytest
-
-from pyspark.sql import functions as F
-
-from git_etl_spark.sinks.versioned import (
-    current_version,
-    prune_snapshots,
-    publish_snapshot,
-    read_snapshot,
-)
-
-
-def test_publish_read_time_travel(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    v1 = publish_snapshot(spark.range(5).withColumn("tag", F.lit("a")), t)
-    v2 = publish_snapshot(spark.range(8).withColumn("tag", F.lit("b")), t)
-    assert (v1, v2) == (1, 2)
-    assert current_version(t) == 2
-    assert read_snapshot(spark, t).count() == 8  # current
-    old = read_snapshot(spark, t, version=1)
-    assert old.count() == 5 and old.select("tag").distinct().collect()[0][0] == "a"
-
-
-def test_reader_isolated_from_inflight_publish(spark, tmp_path):
-    """A reader that resolved the pointer before a new publish still
-    reads its full old snapshot afterwards (immutability), and a fresh
-    resolve sees the new one."""
-    t = str(tmp_path / "tbl")
-    publish_snapshot(spark.range(3), t)
-    pinned = current_version(t)
-    publish_snapshot(spark.range(100), t)
-    assert read_snapshot(spark, t, version=pinned).count() == 3
-    assert read_snapshot(spark, t).count() == 100
-
-
-def test_prune_retention(spark, tmp_path):
-    t = str(tmp_path / "tbl")
-    for n in (1, 2, 3, 4):
-        publish_snapshot(spark.range(n), t)
-    dropped = prune_snapshots(t, keep_last=2)
-    assert dropped == [1, 2]
-    assert read_snapshot(spark, t).count() == 4
-    assert read_snapshot(spark, t, version=3).count() == 3
-    with pytest.raises(FileNotFoundError):
-        read_snapshot(spark, t, version=1)
 
 
 def test_warehouse_snapshot_cross_table_atomicity(spark, tmp_path):

@@ -3,19 +3,16 @@
 A ``Window.orderBy(...)`` without a ``partitionBy`` funnels every row
 through ONE task — the classic 100 TB killer when the input is
 corpus-sized. The repo's standing rule (audited per-site in VERDICT
-r11/r12): every such site must either run over a bounded /
-re-aggregated input (and say so), or name its measured
-``functions.ranking`` drop-in replacement with the crossover at which
-the swap wins. This test walks the operator sources with ``ast`` and
-asserts the rule *structurally*, so a new unbounded global window
+r11/r12): every such site must run over a bounded / re-aggregated
+input and say so. This test walks the operator sources with ``ast``
+and asserts the rule *structurally*, so a new unbounded global window
 cannot slip into a future query unnoticed (VERDICT r12 task 7).
 
 The justification must live in the ENCLOSING FUNCTION's source
 (docstring or comment) and match :data:`_JUSTIFIED` — the vocabulary
 the existing audited sites already use. When this test fails on a new
-site, either bound the window's input and document the bound, or use
-``git_etl_spark.functions.ranking`` (``global_ntile`` / the ranked
-primitive) and cite the crossover measurement.
+site, bound the window's input and document the bound, or partition
+the window.
 """
 
 from __future__ import annotations
@@ -31,13 +28,9 @@ PACKAGE_ROOT = Path(__file__).resolve().parent.parent / "git_etl_spark"
 _WINDOW_ALIASES = {"Window", "_W", "W"}
 
 # The justification vocabulary of the audited sites: a named bound
-# ("bounded", "rollup", "aggregated" series/input) or the named
-# replacement primitive with its measured crossover.
-_JUSTIFIED = re.compile(
-    r"global_ntile|functions\.ranking|ranking\.py|crossover"
-    r"|bounded|rollup|aggregated",
-    re.I,
-)
+# ("bounded", "rollup", "aggregated" series/input) or a measured
+# crossover below which the single-task window wins.
+_JUSTIFIED = re.compile(r"crossover|bounded|rollup|aggregated", re.I)
 
 
 def _chain(node: ast.AST) -> tuple[str | None, list[str]]:
@@ -118,10 +111,9 @@ def test_every_partitionless_window_names_its_bound_or_replacement():
         if not _JUSTIFIED.search(fsrc)
     ]
     assert not offenders, (
-        "partitionless Window.orderBy sites without a documented bound "
-        "or a functions.ranking replacement note:\n  "
+        "partitionless Window.orderBy sites without a documented "
+        "bound:\n  "
         + "\n  ".join(offenders)
         + "\nEither bound the window's input (and say so in the "
-        "function), or swap in git_etl_spark.functions.ranking and "
-        "cite the crossover."
+        "function), or partition the window."
     )
