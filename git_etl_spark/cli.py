@@ -7,7 +7,8 @@ Two modes, mirroring the reference exactly:
   ``./repositories.json``): resolve the repo list via S6/S7 discovery,
   run the multi-repo ETL with O2 per-repo fail isolation, print the
   summary banner (processed / skipped / failed counts,
-  ``main.ts:357-369``), exit 1 only if the config itself cannot load.
+  ``main.ts:357-369``) plus one ``<path>: <error>`` line on stderr per
+  failed repository, exit 1 only if the config itself cannot load.
 - **Single-repo mode** (positional path): validate the path exists and
   is a directory (exit 1 otherwise, ``main.ts:400-411``); run the same
   ETL as config mode over the one repo; if it skips the repo (no
@@ -82,6 +83,8 @@ def _print_banner(report: dict, total: int) -> None:
         print(f"{len(report['skipped'])} repositories skipped (no matching commits or invalid)")
     if report["failed"]:
         print(f"{len(report['failed'])} repositories failed")
+        for f in report["failed"]:
+            print(f"{f['repo']}: {f['error']}", file=sys.stderr)
     print("=" * 60 + "\n")
 
 

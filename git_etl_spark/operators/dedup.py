@@ -16,11 +16,14 @@ Scale design notes (these run against 100 TB corpora):
   is the library form of the same idea.
 - Every hash here (md5-derived) is engine-independent — the SimHash
   query is oracle-checked bit-for-bit against DuckDB.
+- Every cluster query (exact-Jaccard, embedding-cosine, SimHash) runs
+  connected components on one engine, ``graph.large_star_small_star``:
+  O(log n) rounds whatever the component diameter. Embedding-cosine
+  pairs have one source, the exact all-pairs tier, because at the
+  calibrated threshold the qualifying pair set is itself quadratic.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -28,7 +31,7 @@ from pyspark.sql import functions as F
 from ..functions.vector import norm
 from ..io import load_table
 from ..registry import query
-from ..session import iter_checkpoint, loop_shuffle_partitions, session_artifact
+from ..session import iter_checkpoint, session_artifact
 
 # DuckDB twin of functions.vector.norm over the raw embedding column
 _DUCK_NORM = (
@@ -65,11 +68,6 @@ MINHASH_BANDS = 8
 WITHIN_SALTS = 8
 MINHASH_PRIME = (1 << 31) - 1  # Mersenne prime for the universal hash family
 
-# Above this edge count, connected components switches from min-label
-# propagation (O(diameter) rounds) to Large-Star/Small-Star (O(log n),
-# diameter-independent) — see dedup_cluster_components. Both engines are
-# oracle-verified; tests force the switch to assert equivalence.
-LS_SS_EDGE_THRESHOLD = 5_000_000
 
 
 @query(
@@ -498,14 +496,12 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     to this corpus's near-random vectors). The verified pair set is a
     session artifact, consumed by this query and dedup_semantic_clusters.
 
-    This is the EXACT tier (all pairs scored). At this calibrated-low
-    threshold that is not a compromise: ~1% of ALL pairs qualify on
-    near-random embeddings, so the output itself is Θ(corpus²) and no
-    algorithm does better than a well-executed quadratic scan. At real
-    semantic-dedup thresholds (cos ≥ ~0.7) the qualifying set is sparse
-    and the blocked tier (:func:`blocked_cosine_pairs`) prunes the
-    quadratic candidate space instead — `semantic_clusters` routes
-    between the two on threshold.
+    All pairs are scored exactly. At this calibrated-low threshold that
+    is not a compromise: ~1% of ALL pairs qualify on near-random
+    embeddings, so the output itself is Θ(corpus²) and no algorithm
+    does better than a well-executed quadratic scan. (Hyperplane LSH
+    separates cos 0.35 from random at only 0.61 vs 0.5 per bit, so a
+    blocked candidate set with honest recall would admit ~all pairs.)
 
     Plan shape, tuned against measured alternatives at sf0.1:
 
@@ -529,9 +525,7 @@ def dedup_embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         ("embeddings",),
         # tiny (near-dup pairs only)
-        lambda: _exact_cosine_pairs(
-            spark, sf_dir, COSINE_DUP_THRESHOLD
-        ).localCheckpoint(),
+        lambda: _exact_cosine_pairs(spark, sf_dir).localCheckpoint(),
     )
 
 EMBED_DIM = 64
@@ -554,174 +548,29 @@ def _unit_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(spark.sparkContext.defaultParallelism)
 
 
-def _pair_dot(prefix_a: str, prefix_b: str):
-    """Left-associative dot-product chain over two flat u-column sets —
-    the SAME addition order as the exact tier and the DuckDB oracle's
-    sequential list fold, so cos values are bitwise identical no matter
-    which tier produced the pair."""
+
+def _exact_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All-pairs exact cosine ≥ COSINE_DUP_THRESHOLD (vec_a < vec_b) —
+    the quadratic kernel. The dot product is a left-associative add
+    chain: the same addition order as the DuckDB oracle's sequential
+    list fold, so cos values are bitwise identical."""
     from functools import reduce
 
-    return reduce(
-        lambda x, y: x + y,
-        [
-            F.col(f"{prefix_a}.u{i}") * F.col(f"{prefix_b}.u{i}")
-            for i in range(EMBED_DIM)
-        ],
-    )
-
-
-def _exact_cosine_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float
-) -> DataFrame:
-    """All-pairs exact cosine ≥ threshold (vec_a < vec_b) — the
-    quadratic kernel: correct at any threshold, optimal when the
-    output is itself quadratic, and the recall oracle for the blocked
-    tier's pytest."""
     unit = _unit_cols(spark, sf_dir)
     a, b = unit.alias("a"), unit.alias("b")
+    dot = reduce(
+        lambda x, y: x + y,
+        [F.col(f"a.u{i}") * F.col(f"b.u{i}") for i in range(EMBED_DIM)],
+    )
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            _pair_dot("a", "b").alias("cos_sim"),
+            dot.alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= COSINE_DUP_THRESHOLD)
     )
-
-
-# Below this cosine threshold the blocked tier refuses to pretend: a
-# hyperplane family separates cos τ pairs from random pairs at rate
-# (1 − acos(τ)/π) vs 0.5 per bit — at τ < ~0.7 the gap is so thin that
-# any table count with honest recall admits ~all pairs as candidates,
-# while the qualifying output itself approaches Θ(corpus²) anyway.
-# `semantic_clusters` therefore routes low thresholds to the exact tier.
-BLOCKED_EDGE_MIN_COS = 0.7
-
-
-def lsh_plan(
-    threshold: float, target_recall: float = 0.999, bits: int = 8
-) -> tuple[int, int]:
-    """(bits, n_tables) for hyperplane LSH at a cosine threshold.
-
-    Per random hyperplane, a pair at cos τ collides with probability
-    p = 1 − acos(τ)/π; a b-bit table with probability p^b; any of L
-    tables with 1 − (1−p^b)^L. L is the smallest table count whose
-    worst-case (exactly-at-threshold) recall meets ``target_recall`` —
-    pairs above the threshold recall strictly better."""
-    import math
-
-    p = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
-    per_table = p**bits
-    if per_table >= 1.0:
-        return bits, 1
-    n_tables = math.ceil(
-        math.log(1.0 - target_recall) / math.log(1.0 - per_table)
-    )
-    return bits, max(1, n_tables)
-
-
-def blocked_cosine_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float,
-    target_recall: float = 0.999,
-    bits: int = 8,
-    n_tables: int | None = None,
-    seed: int = 97,
-) -> DataFrame:
-    """Blocked cosine near-dup pairs: hyperplane-LSH bucket candidates,
-    exact verification — the 100 TB production edge source for
-    semantic dedup (candidates ∝ bucket co-occupancy, never corpus²).
-
-    Stages:
-
-    1. **Signatures** (linear): one Arrow-batched pandas UDF computes
-       all L·b hyperplane sign bits as a single numpy matmul per batch
-       and packs them into L table signatures. (A literal-coefficient
-       column expression would also work, but L·b·dim ≈ 10⁴ expression
-       nodes per row is codegen-hostile; one BLAS matmul is the right
-       kernel for this embarrassingly parallel step.)
-    2. **Candidates**: posexplode to (vec_id, table, sig), self-join on
-       (table, sig), keep vec_a < vec_b, distinct. Hot buckets split
-       via AQE skew-join at scale.
-    3. **Verify** (JVM): join candidates back to the normalized flat
-       columns and compute the exact dot with the SAME addition order
-       as the exact tier — verified cos values are bitwise identical,
-       so downstream clustering cannot tell which tier fed it.
-
-    Recall is a design parameter, not a hope: table count comes from
-    `lsh_plan(threshold, target_recall)` — at-threshold pairs are
-    recalled with ≥ target_recall probability, higher-cos pairs
-    strictly better. The exact tier is this function's recall oracle
-    in tests/test_blocked_semantic.py."""
-    unit = _unit_cols(spark, sf_dir)
-    cand = _blocked_candidates(
-        spark, unit, threshold, target_recall, bits, n_tables, seed
-    )
-    ua, ub = unit.alias("ua"), unit.alias("ub")
-    return (
-        cand.join(ua, F.col("vec_a") == F.col("ua.vec_id"))
-        .join(ub, F.col("vec_b") == F.col("ub.vec_id"))
-        .select("vec_a", "vec_b", _pair_dot("ua", "ub").alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-    )
-
-
-def _blocked_candidates(
-    spark: SparkSession,
-    unit: DataFrame,
-    threshold: float,
-    target_recall: float = 0.999,
-    bits: int = 8,
-    n_tables: int | None = None,
-    seed: int = 97,
-) -> DataFrame:
-    """LSH bucket co-occupancy candidates (vec_a < vec_b, distinct) —
-    stage 1+2 of blocked_cosine_pairs, split out so tests can measure
-    candidate pruning directly."""
-    import numpy as np
-
-    if n_tables is None:
-        bits, n_tables = lsh_plan(threshold, target_recall, bits)
-    planes = np.random.default_rng(seed).standard_normal(
-        (n_tables * bits, EMBED_DIM)
-    )
-    b_planes = spark.sparkContext.broadcast(planes)
-    n_tables_local, bits_local = n_tables, bits
-
-    @F.pandas_udf("array<long>")
-    def signatures(s: pd.DataFrame) -> pd.Series:
-        u = s.to_numpy(dtype=np.float64)
-        sign_bits = (u @ b_planes.value.T) >= 0.0  # (n, L·b)
-        weights = 1 << np.arange(bits_local, dtype=np.int64)
-        sigs = (
-            sign_bits.reshape(len(u), n_tables_local, bits_local).astype(
-                np.int64
-            )
-            @ weights
-        )
-        return pd.Series(list(sigs))
-
-    ucols = F.struct(*[F.col(f"u{i}") for i in range(EMBED_DIM)])
-    posted = unit.select(
-        "vec_id", F.posexplode(signatures(ucols)).alias("t", "sig")
-    )
-    a, b = posted.alias("a"), posted.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-        )
-        .dropDuplicates(["vec_a", "vec_b"])
-    )
-
 
 @query(
     "dedup_ngram_jaccard",
@@ -1537,26 +1386,20 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     turns pairwise matches into dedup groups, so one representative per
     cluster survives.
 
-    Spark side: the iteration runs on the **exact-clique-collapsed
-    graph** (`_distinct_set_groups`): one node per distinct token set,
-    an edge per verified representative pair. Exact-duplicate cliques —
-    k² edges in the doc-pair graph — are single nodes here, so both the
-    edge count and the effective diameter shrink by the duplication
-    factor before any propagation happens. Per round: min label across
-    edges, elementwise least, eager ``localCheckpoint`` so lineage and
-    planning stay O(1) (the GraphFrames trick); terminates when no
-    label changes. The loop runs under a shuffle-partition count sized
-    to the collapsed edge list (~1 per 500k edges) instead of the
-    session default — at survey scale the rep graph is thousands of
-    rows and per-round fixed cost dominates, while at 100 TB the same
-    formula scales the round back out. Membership expansion happens
-    once, after convergence. The DuckDB oracle computes the fixpoint of
-    the full doc-pair graph with a recursive CTE, so the collapsed
-    iteration is verified against declarative ground truth. At 100 TB
-    swap simple propagation for large-star/small-star — same per-round
-    join shape, provably O(log n) rounds — and checkpoint to reliable
-    storage. The labels are a session artifact, consumed by this query
-    and pipeline_leakage_safe_split."""
+    Spark side: components run on the **exact-clique-collapsed
+    graph** (`_distinct_set_groups`): one node per distinct token set
+    (labelled by its min doc_id), an edge per verified representative
+    pair. Exact-duplicate cliques — k² edges in the doc-pair graph —
+    are single nodes here, so the edge count shrinks by the duplication
+    factor before the engine runs. The engine is Large-Star/Small-Star
+    (`graph.large_star_small_star`): O(log n) rounds whatever the
+    component diameter, each round sized to the collapsed edge list and
+    checkpointed through `session.iter_checkpoint`. Membership
+    expansion happens once, after convergence. The DuckDB oracle
+    computes the fixpoint of the full doc-pair graph with a recursive
+    CTE, so the collapsed iteration is verified against declarative
+    ground truth. The labels are a session artifact, consumed by this
+    query and pipeline_leakage_safe_split."""
     return session_artifact(
         spark,
         "cluster-labels",
@@ -1567,142 +1410,34 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .graph import large_star_small_star
+
     members, rep_pairs = _rep_graph_materialized(spark, sf_dir)
-    edges = rep_pairs.select(F.col("key_a").alias("a"), F.col("key_b").alias("b"))
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()
-    # nodes that appear in any doc-level pair: groups of size ≥ 2
-    # (internal clique edges) plus endpoints of cross-group edges
     group_rep = members.groupBy("set_key").agg(
         F.min("doc_id").alias("rep"), F.count("*").alias("sz")
     )
-    nodes = (
-        group_rep.join(
-            sym.select(F.col("a").alias("set_key")).distinct(),
-            "set_key",
-            "left_semi",
-        )
-        .unionByName(group_rep.filter(F.col("sz") >= 2))
-        .dropDuplicates(["set_key"])
-        .select("set_key", F.col("rep").alias("lbl"))
+    # LS/SS labels components by the MIN NODE ID, so it must run in
+    # rep-id space (rep = group's min doc_id), not set_key space —
+    # md5-string ordering has nothing to do with cluster ids
+    ga = group_rep.select(F.col("set_key").alias("key_a"), F.col("rep").alias("a"))
+    gb = group_rep.select(F.col("set_key").alias("key_b"), F.col("rep").alias("b"))
+    rep_edges = rep_pairs.join(ga, "key_a").join(gb, "key_b").select("a", "b")
+    rep_labels = large_star_small_star(spark, rep_edges).select(
+        F.col("v").alias("rep"), "lbl"
     )
-    # Engine selection: min-label propagation needs O(diameter) rounds —
-    # fine for the collapsed near-dup graph at survey scale; above the
-    # threshold switch to Large-Star/Small-Star (O(log n) rounds,
-    # diameter-independent). Both engines are independently verified
-    # against the same recursive-CTE oracle (graph_components_large_star).
-    def _ls_ss_labels() -> DataFrame:
-        from .graph import large_star_small_star
-
-        # LS/SS labels components by the MIN NODE ID, so it must run in
-        # rep-id space (rep = group's min doc_id), not set_key space —
-        # md5-string ordering has nothing to do with cluster ids
-        ga = group_rep.select(
-            F.col("set_key").alias("key_a"), F.col("rep").alias("a")
-        )
-        gb = group_rep.select(
-            F.col("set_key").alias("key_b"), F.col("rep").alias("b")
-        )
-        rep_edges = rep_pairs.join(ga, "key_a").join(gb, "key_b").select("a", "b")
-        rep_labels = large_star_small_star(spark, rep_edges).select(
-            F.col("v").alias("rep"), "lbl"
-        )
-        # LS/SS only labels vertices with cross edges; size-≥2 groups
-        # without cross edges still need their self-label
-        return (
-            nodes.join(group_rep.select("set_key", "rep"), "set_key")
-            .join(rep_labels, "rep", "left")
-            .select(
-                "set_key",
-                F.coalesce(rep_labels.lbl, nodes.lbl).alias("lbl"),
-            )
-        )
-
-    if sym.count() > LS_SS_EDGE_THRESHOLD:
-        labels = _ls_ss_labels()
-    else:
-        from .graph import ConvergenceError
-
-        try:
-            labels = _min_label_components(
-                spark, sym, nodes.select(F.col("set_key").alias("v"), "lbl")
-            ).select(F.col("v").alias("set_key"), "lbl")
-        except ConvergenceError:
-            # a sub-threshold graph can still have diameter > the round
-            # bound (e.g. one long path of near-dups); the O(log n)
-            # engine is diameter-independent, so escalate instead of
-            # failing the query
-            labels = _ls_ss_labels()
+    # nodes that appear in any doc-level pair: endpoints of cross-group
+    # edges (labelled by LS/SS) plus groups of size ≥ 2 (internal
+    # clique edges), which without a cross edge keep their self-label
+    labels = (
+        group_rep.join(rep_labels, "rep", "left")
+        .filter(F.col("lbl").isNotNull() | (F.col("sz") >= 2))
+        .select("set_key", F.coalesce("lbl", "rep").alias("lbl"))
+    )
     return (
         members.join(labels, "set_key")
         .select(F.col("doc_id"), F.col("lbl").alias("cluster_id"))
         .localCheckpoint()  # converged labels
     )
-
-
-MIN_LABEL_MAX_ROUNDS = 20
-
-
-def _min_label_components(
-    spark: SparkSession, sym: DataFrame, nodes: DataFrame
-) -> DataFrame:
-    """Min-label propagation to a fixpoint: ``sym`` is the materialized
-    symmetric edge list (a, b); ``nodes`` the initial labels (v, lbl).
-    Per round: min label across edges, elementwise least, then a *lazy*
-    ``localCheckpoint`` whose materializing action is the changed-label
-    count itself — one job per round (checkpoint + convergence probe
-    merged), lineage and planning O(1) (the GraphFrames trick);
-    terminates when no label changes (≤ diameter rounds). Rounds run
-    under a shuffle-partition count sized to the edge list
-    (`loop_shuffle_partitions`). At 100 TB swap for
-    large-star/small-star — same per-round join shape, provably
-    O(log n) rounds — and checkpoint to reliable storage.
-
-    Raises :class:`~..operators.graph.ConvergenceError` if the round
-    bound is exhausted before stability (a component with diameter >
-    MIN_LABEL_MAX_ROUNDS) — unconverged labels are never returned
-    silently. ``dedup_cluster_components`` catches this and escalates
-    to the diameter-independent Large-Star/Small-Star engine."""
-    from .graph import ConvergenceError
-
-    stable = False
-    with loop_shuffle_partitions(spark, sym.count()):
-        labels = iter_checkpoint(nodes)
-        for _ in range(MIN_LABEL_MAX_ROUNDS):  # breaks as soon as stable
-            neighbor_min = (
-                sym.join(labels, sym.a == labels.v)
-                .groupBy(F.col("b").alias("v"))
-                .agg(F.min("lbl").alias("nlbl"))
-            )
-            stepped = (
-                labels.join(neighbor_min, "v", "left")
-                .select(
-                    "v",
-                    F.least(F.col("lbl"), F.coalesce("nlbl", F.col("lbl"))).alias(
-                        "lbl"
-                    ),
-                    (F.coalesce("nlbl", F.col("lbl")) < F.col("lbl")).alias("chg"),
-                )
-            )
-            # lazy: the n_chg aggregate is the action that materializes
-            # this round's checkpoint — one job instead of checkpoint
-            # job + probe job
-            stepped = iter_checkpoint(stepped, eager=False)
-            labels = stepped.select("v", "lbl")
-            n_chg = stepped.agg(
-                F.sum(F.col("chg").cast("long")).alias("c")
-            ).collect()[0]["c"]
-            if not n_chg:
-                stable = True
-                break
-    if not stable:
-        raise ConvergenceError(
-            f"min-label propagation did not stabilize within "
-            f"{MIN_LABEL_MAX_ROUNDS} rounds (component diameter exceeds the "
-            f"bound) — escalate to large_star_small_star (O(log n) rounds)"
-        )
-    return labels
 
 
 @query(
@@ -1831,75 +1566,23 @@ def dedup_incremental_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication: connected components over
-    the embedding-cosine near-dup graph (cos ≥ threshold), cluster id =
-    min vec_id in the component, plus the keep-flag — retain exactly
-    one representative per semantic cluster, drop the rest.
+    the embedding-cosine near-dup graph (cos ≥ COSINE_DUP_THRESHOLD),
+    cluster id = min vec_id in the component, plus the keep-flag —
+    retain exactly one representative per semantic cluster, drop the
+    rest.
 
-    The registered query runs :func:`semantic_clusters` at the
-    corpus-calibrated threshold (0.35), which routes to the exact pair
-    tier — the right kernel there, because the qualifying pair set at
-    that threshold is itself ~1% of ALL pairs (Θ(corpus²) output: no
-    blocking scheme can beat a quadratic lower bound, and hyperplane
-    bits separate cos 0.35 from random at only 0.61 vs 0.5). At
-    production semantic-dedup thresholds (≥ 0.7) the same entry point
-    routes to the blocked LSH tier (:func:`blocked_cosine_pairs`) —
-    candidates ∝ bucket co-occupancy, designed recall, identical
-    downstream clustering; tests/test_blocked_semantic.py holds the
-    blocked tier to the exact tier's pairs and clusters on a planted
-    near-dup corpus. The DuckDB recursive CTE verifies the full
-    pipeline — pair threshold, component structure, representative
-    choice — end to end."""
-    return semantic_clusters(spark, sf_dir)
+    Pairs are the dedup_embedding_cosine_pairs session artifact (the
+    exact all-pairs tier: at the corpus-calibrated 0.35 the qualifying
+    pair set is itself ~1% of ALL pairs, so no blocking scheme beats
+    the quadratic scan); components come from Large-Star/Small-Star,
+    whose min-node-id labels are the min vec_id. The DuckDB recursive
+    CTE verifies the full pipeline — pair threshold, component
+    structure, representative choice — end to end."""
+    from .graph import large_star_small_star
 
-
-def semantic_clusters(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = COSINE_DUP_THRESHOLD,
-    edge_source: str = "auto",
-    **lsh_kwargs,
-) -> DataFrame:
-    """Semantic dedup with a routed edge source: ``auto`` picks the
-    blocked LSH tier at thresholds where it prunes AND recalls
-    (≥ BLOCKED_EDGE_MIN_COS), the exact tier below — where the output
-    is intrinsically quadratic and exact scanning is optimal. Both
-    tiers emit bitwise-identical verified cos values, so clustering is
-    tier-agnostic."""
-    if edge_source == "auto":
-        edge_source = (
-            "blocked" if threshold >= BLOCKED_EDGE_MIN_COS else "exact"
-        )
-    if edge_source == "blocked":
-        pairs = blocked_cosine_pairs(spark, sf_dir, threshold, **lsh_kwargs)
-    elif threshold == COSINE_DUP_THRESHOLD:
-        # the registered path: the cosine-pairs session artifact
-        pairs = dedup_embedding_cosine_pairs(spark, sf_dir)
-    else:
-        pairs = _exact_cosine_pairs(spark, sf_dir, threshold)
-    return _cluster_vec_pairs(spark, pairs)
-
-
-def _cluster_vec_pairs(spark: SparkSession, pairs: DataFrame) -> DataFrame:
-    """(vec_id, cluster_id, is_representative) from verified cosine
-    pairs via min-label propagation, escalating to Large-Star/
-    Small-Star when the component diameter exceeds the round bound
-    (labels start as vec_id, so LS/SS's min-node-id fixpoint is the
-    same labeling)."""
-    from .graph import ConvergenceError
-
+    pairs = dedup_embedding_cosine_pairs(spark, sf_dir)
     edges = pairs.select(F.col("vec_a").alias("a"), F.col("vec_b").alias("b"))
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint()
-    nodes = (
-        sym.select(F.col("a").alias("v")).distinct().withColumn("lbl", F.col("v"))
-    )
-    try:
-        labels = _min_label_components(spark, sym, nodes)
-    except ConvergenceError:
-        from .graph import large_star_small_star
-
-        labels = large_star_small_star(spark, edges)
+    labels = large_star_small_star(spark, edges)
     return labels.select(
         F.col("v").alias("vec_id"),
         F.col("lbl").alias("cluster_id"),

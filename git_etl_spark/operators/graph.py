@@ -1,11 +1,11 @@
 """Iterative graph analytics on the star schema's implicit graphs.
 
-Connected components (dedup.dedup_cluster_components) and PageRank
-share the same distributed shape: a per-round equi join of an edge
-table against a small node-state table, an aggregate, and an eager
-``localCheckpoint`` to keep lineage O(1) per round. This is the
-DataFrame form of Pregel-style iteration — no RDDs, no driver-side
-loops over collected data; each round is one shuffle keyed by node.
+Connected components (``large_star_small_star``, the one engine behind
+every dedup clustering query) and PageRank share the same distributed
+shape: per round, a shuffle keyed by node, an aggregate, and a
+checkpoint (``session.iter_checkpoint``) to keep lineage O(1). This is
+the DataFrame form of Pregel-style iteration — no RDDs, no driver-side
+loops over collected data.
 """
 
 from __future__ import annotations
@@ -29,8 +29,8 @@ DAMPING = 0.85
 class ConvergenceError(RuntimeError):
     """An iterative fixpoint exhausted its round bound without reaching
     a stable state. Raised instead of returning silently-unconverged
-    labels; callers may escalate to a diameter-independent engine
-    (min-label propagation → Large-Star/Small-Star)."""
+    labels (``large_star_small_star`` after 30 rounds, ~2× its
+    O(log n) bound)."""
 
 
 @query("graph_pagerank_bipartite")  # rows-only: iterative fixpoint, not SQL
@@ -277,9 +277,10 @@ def _lss_round(cur: DataFrame, parts: int) -> DataFrame:
 def large_star_small_star(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """Connected components via alternating Large-Star / Small-Star
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round algorithm the min-label-propagation docstrings
-    point to for 100 TB graphs, where round count must not depend on
-    component diameter.
+    O(log n) rounds, independent of component diameter. It is the only
+    connected-components engine: dedup_cluster_components,
+    dedup_semantic_clusters, dedup_simhash_clusters and
+    graph_components_large_star all label through it.
 
     ``edges``: undirected (a, b) pairs over a totally ordered node
     type. Per round, over the symmetrized current edge set:
@@ -393,9 +394,9 @@ def graph_components_large_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Large-Star/Small-Star engine run over the full doc-level
     near-dup pair graph (not the collapsed one — deliberately, so the
     O(log n) algorithm is exercised on the densest graph available) and
-    held to the same recursive-CTE ground truth as the propagation
-    engine. Two independent distributed CC implementations against one
-    declarative oracle."""
+    held to the same recursive-CTE ground truth as
+    dedup_cluster_components, which runs the same engine over the
+    exact-clique-collapsed graph."""
     from .dedup import dedup_jaccard_pairs
 
     pairs = dedup_jaccard_pairs(spark, sf_dir)

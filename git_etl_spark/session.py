@@ -211,8 +211,8 @@ def iter_checkpoint(df, eager: bool = True):
     (``spark.sparkContext.setCheckpointDir(...)`` pointing at HDFS/S3),
     every round checkpoints reliably; otherwise the local fast path is
     used (the right default for local[] testing and short loops).
-    All iterative operators (min-label / Large-Star–Small-Star
-    components, PageRank, IVF Lloyd rounds) route their round
+    All iterative operators (Large-Star–Small-Star components,
+    PageRank, IVF Lloyd rounds) route their round
     materialization through here, so one ``setCheckpointDir`` call
     flips the whole engine — see DEPLOYMENT.md.
 
@@ -235,7 +235,7 @@ def loop_shuffle_partitions(
     proportional to the loop's working set (~1 per 500k rows, capped at
     the session parallelism).
 
-    Iterative DataFrame algorithms (label propagation, PageRank) pay a
+    Iterative DataFrame algorithms (connected components, PageRank) pay a
     per-round fixed cost ∝ shuffle partitions: task launch, AQE
     planning, checkpoint materialization. Once the working set is
     materialized its size is known, so the round can be sized to the

@@ -51,6 +51,9 @@ LOG_FORMAT = (
     "%H%x00%ae%x00%an%x00%ct%x00%P%x00%s"
 )
 
+# threads running the `git log` scans in repo_commits_df
+SCAN_WORKERS = 8
+
 _RENAME_RE = re.compile(r"\{[^{}]*?=>\s*([^{}]*?)\}")
 
 
@@ -180,23 +183,25 @@ def has_unborn_head(repo_path: str) -> bool:
     return False
 
 
-def scan_repo_commits(repo_path: str, branch: str | None = None) -> list[dict]:
-    """S1: one ``git log --numstat`` subprocess over ``branch`` (default
-    the checked-out one) → parsed commit records."""
-    branch = branch or current_branch(repo_path)
+def scan_repo_commits(repo_path: str) -> list[dict]:
+    """S1: one ``git log --numstat`` subprocess over the checked-out
+    branch → parsed commit records. The closing ``--`` makes git read
+    the branch as a revision even when a path has the same name."""
+    branch = current_branch(repo_path)
     text = _run_git(
-        repo_path, "log", branch, f"--pretty=format:{LOG_FORMAT}", "--numstat"
+        repo_path, "log", branch, f"--pretty=format:{LOG_FORMAT}", "--numstat", "--"
     )
     return parse_git_log_text(text, repo_name_of(repo_path), branch)
 
 
-def has_commits_by_author(repo_path: str, pattern: str, branch: str | None = None) -> bool:
-    """S5 author-existence probe with the LIMIT-1 pushed into git
-    (reference ``main.ts:51-73``); the pattern is a parameter, not the
-    reference's hard-coded constant (SURVEY §2.1 S5)."""
-    branch = branch or current_branch(repo_path)
+def has_commits_by_author(repo_path: str, pattern: str) -> bool:
+    """S5 author-existence probe over the checked-out branch with the
+    LIMIT-1 pushed into git (reference ``main.ts:51-73``); the pattern
+    is a parameter, not the reference's hard-coded constant (SURVEY
+    §2.1 S5). The closing ``--`` is as in ``scan_repo_commits``."""
     out = _run_git(
-        repo_path, "log", branch, "--author", pattern, "--format=%H", "-n", "1"
+        repo_path, "log", current_branch(repo_path), "--author", pattern,
+        "--format=%H", "-n", "1", "--",
     )
     return bool(out.strip())
 
@@ -206,16 +211,13 @@ def list_tracked_files(repo_path: str) -> list[str]:
     return [ln for ln in _run_git(repo_path, "ls-files").splitlines() if ln]
 
 
-def scan_isolated(scan: Callable[..., list], path: str, failed: dict[str, str] | None, *args) -> list:
-    """``scan(path, *args)``. With ``failed`` given, an error leaves the
-    repository out of the batch: it is recorded as ``failed[path]`` and
-    yields no rows (O2 per-repo fail isolation). Without it the error
-    propagates."""
+def scan_isolated(scan: Callable[[str], list], path: str, failed: dict[str, str]) -> list:
+    """``scan(path)``; an error leaves the repository out of the batch:
+    it is recorded as ``failed[path]`` and yields no rows (O2 per-repo
+    fail isolation)."""
     try:
-        return scan(path, *args)
+        return scan(path)
     except Exception as exc:  # noqa: BLE001 — O2 per-repo fail isolation
-        if failed is None:
-            raise
         failed[path] = str(exc)
         return []
 
@@ -234,11 +236,7 @@ def batch_table(
 
 
 def repo_commits_df(
-    spark: SparkSession,
-    repo_paths: list[str],
-    branch: str | None = None,
-    max_workers: int = 8,
-    failed: dict[str, str] | None = None,
+    spark: SparkSession, repo_paths: list[str], failed: dict[str, str]
 ) -> DataFrame:
     """S1 as a DataFrame source: parallel subprocess scans →
     one typed DataFrame (COMMITS_SCHEMA), unique on (repo_name, sha):
@@ -246,12 +244,11 @@ def repo_commits_df(
     repositories with one directory name) keeps the batch's last row
     (``batch_table``). Empty repo list or all-empty repos still yield
     an empty frame with the right schema (F3 guard). A repository whose
-    scan fails is recorded in ``failed`` when it is given
-    (``scan_isolated``)."""
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+    scan fails is recorded in ``failed`` (``scan_isolated``)."""
+    with ThreadPoolExecutor(max_workers=SCAN_WORKERS) as pool:
         batches = list(
             pool.map(
-                lambda p: scan_isolated(scan_repo_commits, p, failed, branch),
+                lambda p: scan_isolated(scan_repo_commits, p, failed),
                 repo_paths,
             )
         )

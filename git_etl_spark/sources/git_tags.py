@@ -114,14 +114,12 @@ def scan_repo_tags(repo_path: str) -> list[dict]:
 
 
 def repo_tags_df(
-    spark: SparkSession,
-    repo_paths: list[str],
-    failed: dict[str, str] | None = None,
+    spark: SparkSession, repo_paths: list[str], failed: dict[str, str]
 ) -> DataFrame:
     """S2 as a DataFrame source (TAGS_SCHEMA), unique on
     (repo_name, tag_name); a duplicate keeps the batch's last row
     (``batch_table``). A repository whose scan fails is recorded in
-    ``failed`` when it is given (``scan_isolated``)."""
+    ``failed`` (``scan_isolated``)."""
     rows = [t for p in repo_paths for t in scan_isolated(scan_repo_tags, p, failed)]
     table = batch_table(rows, TAGS_SCHEMA, ("repo_name", "tag_name"))
     return spark.createDataFrame(table, TAGS_SCHEMA)

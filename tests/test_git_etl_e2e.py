@@ -208,6 +208,29 @@ def _one_author_repo(root, name, author, email, dates):
     return repo
 
 
+@pytest.mark.parametrize("author_pattern", [None, "Dee Dev"], ids=["all", "author"])
+def test_branch_named_like_a_path_loads(spark, tmp_path, author_pattern):
+    """A repository checked out on branch ``docs`` that also holds a
+    ``docs/`` directory: ``git log docs`` alone is ambiguous (revision
+    or path?) and exits 128, so both the commit scan and the author
+    probe must end their arguments with ``--``."""
+    from git_etl_spark.plans.git_pipeline import etl_repos
+
+    repo = tmp_path / "proj-docs"
+    repo.mkdir()
+    _git(repo, "init", "-q", "-b", "docs")
+    _commit(
+        repo, "Dee Dev", "dee@example.com", "2024-09-01T10:00:00+00:00",
+        "write docs", {"docs/index.md": "# docs\n"},
+    )
+    out = tmp_path / "wh"
+    report = etl_repos(spark, [str(repo)], str(out), author_pattern=author_pattern)
+    assert report["failed"] == []
+    assert report["processed"] == [str(repo)]
+    (row,) = spark.read.parquet(str(out / "commits")).collect()
+    assert (row.branch, row.message, row.files_changed) == ("docs", "write docs", 1)
+
+
 def test_repo_subset_runs_keep_author_totals(spark, tmp_path):
     """K2: authors re-aggregate from the merged commits table. Two
     single-repo runs into one warehouse by the same author must count
@@ -321,17 +344,6 @@ def test_config_run_isolates_non_git_directory(
     import json
 
     from git_etl_spark.cli import main
-    from git_etl_spark.plans import git_pipeline
-
-    # keep each run report: the config-mode banner prints counts only
-    reports = []
-    etl_repos = git_pipeline.etl_repos
-
-    def recording_etl_repos(*args, **kwargs):
-        reports.append(etl_repos(*args, **kwargs))
-        return reports[-1]
-
-    monkeypatch.setattr(git_pipeline, "etl_repos", recording_etl_repos)
 
     # git must not find a repository above the plain directory
     monkeypatch.setenv("GIT_CEILING_DIRECTORIES", str(tmp_path))
@@ -345,12 +357,13 @@ def test_config_run_isolates_non_git_directory(
     out = tmp_path / "wh"
 
     assert main(["-c", str(cfg), "-o", str(out)]) == 0
-    stdout = capsys.readouterr().out
-    assert "Processed 1/2 repositories successfully" in stdout
-    assert "1 repositories failed" in stdout
-    ((failure,),) = [r["failed"] for r in reports]
-    assert failure["repo"] == str(bad)
-    assert git_said in failure["error"]
+    captured = capsys.readouterr()
+    assert "Processed 1/2 repositories successfully" in captured.out
+    assert "1 repositories failed" in captured.out
+    (failure,) = [
+        ln for ln in captured.err.splitlines() if ln.startswith(f"{bad}: ")
+    ]
+    assert git_said in failure
     (row,) = spark.read.parquet(str(out / "commits")).collect()
     assert row.repo_name == "proj-good"
     (row,) = spark.read.parquet(str(out / "repos")).collect()
@@ -376,8 +389,9 @@ def test_stored_timestamps_ignore_driver_timezone(spark, synthetic_repo):
     os.environ["TZ"] = "America/New_York"
     time.tzset()
     try:
-        commits = repo_commits_df(spark, [str(synthetic_repo)])
-        tags = repo_tags_df(spark, [str(synthetic_repo)])
+        failed = {}
+        commits = repo_commits_df(spark, [str(synthetic_repo)], failed)
+        tags = repo_tags_df(spark, [str(synthetic_repo)], failed)
         commit_epochs = {
             r.message: r.epoch
             for r in commits.select(
@@ -397,6 +411,7 @@ def test_stored_timestamps_ignore_driver_timezone(spark, synthetic_repo):
             os.environ["TZ"] = saved
         time.tzset()
 
+    assert failed == {}
     assert commit_epochs["initial commit"] == 1704103200  # 2024-01-01T10:00Z
     assert commit_epochs["more code"] == 1704373200  # 2024-01-04T13:00Z
     assert tag_epochs == {"v0.1": None, "v0.2": 1704373200}
@@ -409,13 +424,15 @@ def test_git_batches_plan_as_local_relations(spark, synthetic_repo):
     from git_etl_spark.sources.git_log import repo_commits_df
     from git_etl_spark.sources.git_tags import repo_tags_df
 
+    failed = {}
     for df in (
-        repo_commits_df(spark, [str(synthetic_repo)]),
-        repo_tags_df(spark, [str(synthetic_repo)]),
+        repo_commits_df(spark, [str(synthetic_repo)], failed),
+        repo_tags_df(spark, [str(synthetic_repo)], failed),
     ):
         plan = optimized_plan(df)
         assert plan.startswith("LocalRelation"), plan
         assert "LogicalRDD" not in plan
+    assert failed == {}
 
 
 @pytest.fixture(scope="module")

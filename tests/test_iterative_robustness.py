@@ -4,46 +4,12 @@ reliable-storage checkpoints with one standard Spark knob."""
 
 from __future__ import annotations
 
-import pytest
-
 from .conftest import SF_CORRECTNESS, forget_artifacts
 
 
-def _path_graph(spark, n):
-    """Path 0-1-...-n (diameter n), symmetrized, plus self-labels."""
-    edges = [(i, i + 1) for i in range(n)]
-    sym = spark.createDataFrame(
-        edges + [(b, a) for a, b in edges], ["a", "b"]
-    ).localCheckpoint()
-    nodes = spark.createDataFrame([(i, i) for i in range(n + 1)], ["v", "lbl"])
-    return sym, nodes
-
-
-def test_min_label_raises_beyond_diameter_bound(spark):
-    """A component with diameter > MIN_LABEL_MAX_ROUNDS must raise
-    ConvergenceError instead of returning unconverged labels: min-label
-    propagation moves a label one hop per round, so a 30-edge path
-    cannot stabilize within the 20-round bound."""
-    from git_etl_spark.operators import dedup
-    from git_etl_spark.operators.graph import ConvergenceError
-
-    sym, nodes = _path_graph(spark, 30)
-    with pytest.raises(ConvergenceError):
-        dedup._min_label_components(spark, sym, nodes)
-
-
-def test_min_label_converges_within_bound(spark):
-    """The same shape under the bound converges to the path minimum."""
-    from git_etl_spark.operators import dedup
-
-    sym, nodes = _path_graph(spark, 15)
-    labels = dedup._min_label_components(spark, sym, nodes)
-    assert {tuple(r) for r in labels.collect()} == {(i, 0) for i in range(16)}
-
-
 def test_large_star_handles_deep_path(spark):
-    """Large-Star/Small-Star is diameter-independent: the 30-edge path
-    that defeats min-label propagation converges to a single star."""
+    """Large-Star/Small-Star is diameter-independent: a 30-edge path
+    (diameter 30) converges to a single star."""
     from git_etl_spark.operators.graph import large_star_small_star
 
     edges = spark.createDataFrame([(i, i + 1) for i in range(30)], ["a", "b"])

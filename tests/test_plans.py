@@ -262,29 +262,14 @@ def test_semantic_clusters_representative_property(spark):
     assert bad.count() == 0
 
 
-def test_blocked_cosine_pairs_never_nested_loop(spark):
-    """The structural point of the blocked semantic tier: candidate
-    generation and verification are equi joins (bucket keys, vec ids)
-    — no BroadcastNestedLoopJoin / CartesianProduct anywhere, unlike
-    the exact tier's deliberate BNLJ."""
-    from git_etl_spark.operators.dedup import blocked_cosine_pairs
-    from git_etl_spark.plans.audit import physical_plan
-
-    plan = physical_plan(
-        blocked_cosine_pairs(spark, SF_CORRECTNESS, 0.9)
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_exact_cosine_tier_is_deliberate_bnlj(spark):
-    """And the exact tier IS the quadratic kernel (vec_id < vec_id
-    non-equi join → BNLJ) — asserted so a refactor can't silently swap
-    the two tiers' roles."""
+    """The exact cosine tier IS the quadratic kernel (vec_id < vec_id
+    non-equi join → BNLJ): at the calibrated threshold its output is
+    itself quadratic, so the plan is asserted, not left to chance."""
     from git_etl_spark.operators.dedup import _exact_cosine_pairs
     from git_etl_spark.plans.audit import physical_plan
 
-    plan = physical_plan(_exact_cosine_pairs(spark, SF_CORRECTNESS, 0.9))
+    plan = physical_plan(_exact_cosine_pairs(spark, SF_CORRECTNESS))
     assert "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan
 
 

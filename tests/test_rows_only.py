@@ -3,7 +3,7 @@ rows-only-checks these, so the real assertions live here)."""
 
 from __future__ import annotations
 
-from .conftest import SF_CORRECTNESS, forget_artifacts
+from .conftest import SF_CORRECTNESS
 
 
 def _q(name):
@@ -377,25 +377,6 @@ def test_chunked_shingling_equals_naive(spark):
     )
     assert chunked.exceptAll(naive).count() == 0
     assert naive.exceptAll(chunked).count() == 0
-
-
-def test_cluster_components_ls_ss_engine_equivalent(spark, monkeypatch):
-    """Forcing the Large-Star/Small-Star branch of
-    dedup_cluster_components (normally taken above 5M edges) must give
-    exactly the propagation engine's clustering."""
-    from git_etl_spark.operators import dedup
-
-    baseline = sorted(
-        map(tuple, dedup.dedup_cluster_components(spark, SF_CORRECTNESS).collect())
-    )
-    monkeypatch.setattr(dedup, "LS_SS_EDGE_THRESHOLD", 0)
-    # the stored labels would short-circuit the forced branch
-    forget_artifacts("cluster-labels")
-    forced = sorted(
-        map(tuple, dedup.dedup_cluster_components(spark, SF_CORRECTNESS).collect())
-    )
-    assert baseline == forced
-    forget_artifacts("cluster-labels")  # don't leak the forced-engine result
 
 
 def test_large_star_small_star_random_graphs(spark):
